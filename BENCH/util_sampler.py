@@ -1,9 +1,10 @@
 #!/usr/bin/env python
-"""Per-core utilization sampler (companion to BENCH/profile_build.py).
+"""Per-core utilization sampler.
 
 Samples /proc/stat once per second for the given core list and prints one
 JSON line per sample: elapsed seconds + busy fraction per core + mean.
-Cross-referencing the timeline against profile_build's commit marks shows
+Cross-referencing the timeline against a build's manifest stage commits
+(``build.*_ms`` in a traced ``perfbench`` ingest run) shows
 WHERE a pinned build leaves its cores idle (stage tails, barriers, serial
 driver sections) — the mechanism behind sub-0.8 strong-scaling readings
 that steal/iowait/host-delivery controls have ruled out.

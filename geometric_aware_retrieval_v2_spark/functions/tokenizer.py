@@ -263,7 +263,6 @@ def tokenize_terms_arrow(
     chunk_bytes = 8 * 1024 * 1024
 
     def run(batches):
-        empty_i64 = pa.array(np.empty(0, np.int64))
         for rb in batches:
             tab = pa.Table.from_batches([rb])
             ids = tab.column("doc_id").to_numpy()

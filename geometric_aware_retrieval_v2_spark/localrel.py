@@ -30,7 +30,7 @@ def local_queries_df(
     """(qid long, text string) LocalRelation from driver-side rows.
 
     The result is tagged with ``_spark_graft_local_rows`` so the
-    interactive query path (operators/index._candidate_blocks) can reuse
+    query probe (operators/index._interactive_trip) can reuse
     the rows directly instead of re-fetching them with a take()."""
     clean = [
         (int(q) if q is not None else None, t if t is None else str(t))

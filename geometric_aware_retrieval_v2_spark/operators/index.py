@@ -18,12 +18,19 @@ driver on a 1000-executor cluster would chunk a 10^12-file build; partition
 granularity P scales with input size while each job stays shuffle-light.
 
 Query topology: postings are document-sharded (see operators/postings.py), so
-scoring is per-(qid, shard) partial top-k inside a grouped Arrow UDF (batched
-NumPy; no per-row Python) followed by a final per-qid top-k window — partials
-are exact because a document's every query term lives in its one shard.
+scoring is a per-(qid, shard) partial top-k followed by a per-qid merge —
+partials are exact because a document's every query term lives in its one
+shard. One mapInArrow kernel (_partials_kernel) scores every (qid, shard)
+group of a partition in batched NumPy, and two routes feed it:
+  * interactive (<= _DRIVER_FINISH_MAX_QIDS qids): a term-pruned scan of the
+    shard-clustered postings, qid/idf expanded from the task closure, no
+    exchange; partial rows are collected and merged on the driver;
+  * exchange (larger batches, offline logs, finish="distributed"): block
+    rows joined to their (qid, idf) and hash-partitioned on (qid, shard);
+    the partials are resolved by a docmap join and ranked by a window.
 
 Block-max WAND (Ding & Suel, SIGIR 2011), adapted to a vectorized two-pass
-form that is *provably exact* (see _score_group): phase 1 decodes the few
+form that is *provably exact* (see _score_blocks): phase 1 decodes the few
 highest-upper-bound blocks to establish a score floor theta (a lower bound on
 the true k-th best score); phase 2 skips every block whose own upper bound
 plus the overlapping upper bounds of the other query terms cannot reach
@@ -41,7 +48,6 @@ from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -527,9 +533,9 @@ def _score_blocks(
 ) -> tuple[np.ndarray, np.ndarray, int, int]:
     """Score one (qid, shard) group of block rows given as plain NumPy
     columns plus a ``get_bytes(i) -> bytes`` accessor. -> (doc_ids, scores,
-    n_blocks, n_decoded). Batched NumPy only — shared by the pandas grouped
-    kernel (distributed tail) and the no-shuffle interactive kernel, so the
-    two paths are score-identical by construction."""
+    n_blocks, n_decoded). Batched NumPy only — the body of _partials_kernel,
+    which both query routes run, so they are score-identical by
+    construction."""
     nb = len(terms)
     ub = idf * (mtf * (k1 + 1.0) / (mtf + k1 * (1.0 - b + b * mdl / avgdl)))
 
@@ -581,29 +587,6 @@ def _score_blocks(
     acc_r = np.floor(acc * 10.0**SCORE_DECIMALS + 0.5) / 10.0**SCORE_DECIMALS
     sel = np.lexsort((uniq, -acc_r))[:k]
     return uniq[sel], acc_r[sel], nb, len(cache)
-
-
-def _score_group_kernel(
-    pdf: pd.DataFrame,
-    k: int,
-    k1: float,
-    b: float,
-    avgdl: float,
-    use_wand: bool,
-) -> tuple[np.ndarray, np.ndarray, int, int]:
-    """pandas adapter over ``_score_blocks`` (the grouped distributed tail)."""
-    byte_col = pdf["bytes"]
-    return _score_blocks(
-        pdf["idf"].to_numpy(dtype=np.float64),
-        pdf["max_tf"].to_numpy(dtype=np.float64),
-        pdf["min_dl"].to_numpy(dtype=np.float64),
-        pdf["first_doc"].to_numpy(dtype=np.int64),
-        pdf["last_doc"].to_numpy(dtype=np.int64),
-        pdf["term_id"].to_numpy(dtype=np.int64),
-        pdf["n"].to_numpy(dtype=np.int64),
-        lambda i: byte_col.iat[i],
-        k=k, k1=k1, b=b, avgdl=avgdl, use_wand=use_wand,
-    )
 
 
 def _shard_partition_salt(
@@ -700,37 +683,20 @@ class IndexHandle:
 # collect becomes a driver bottleneck for offline million-query joins
 _ISIN_PUSHDOWN_MAX_TERMS = 4096
 
-# largest interactive batch whose top-k is finished driver-side (coordinator
+# largest batch taking the interactive route (qid slices + coordinator
 # merge). Collect volume is bounded by qids x n_shards x (k + 32) rows
 _DRIVER_FINISH_MAX_QIDS = 256
 
-# largest batch WORKLOAD routed through the shuffle-free single-stage
-# partials (_interactive_partials), measured as sum(df) over the batch's
-# scoreable (qid, term) pairs — an upper bound on postings touched, free
-# from the probe's df cache. The single-stage plan's parallelism is bounded
-# by n_shards (one task per shard scores its qids serially), so it wins
-# while per-shard work is small and loses to the grouped exchange plan —
-# which spreads qids x shards kernels over the whole cluster — once decode
-# work dominates its ~0.6 s of extra machinery. Measured same-session at
-# 8 shards/local[32]: fast wins 2x at sum(df) ~1.0M (one hot query, 500k
-# docs) and ~1.8M (20 queries, 50k docs); grouped wins 1.5x at ~17.7M
-# (20 queries, 500k docs). 6M splits the measured regimes conservatively;
-# on a cluster n_shards grows with the corpus, moving the true crossover
-# higher, so a too-low constant only forfeits latency, never correctness
-# (both plans are score-identical — same _score_blocks kernel).
+# postings budget of one interactive qid slice, measured as sum(df) over the
+# slice's scoreable (qid, term) pairs — an upper bound on postings touched,
+# free from the probe's df cache. One slice's parallelism is bounded by
+# n_shards (one task per shard scores its qids serially), so a batch over
+# the budget splits into min(ceil(sum(df) / budget), n_qids) slices run as
+# concurrent jobs. Measured same-session at 8 shards/local[32], 500k docs,
+# 20 queries, sum(df) 17.7M: one job 1.11 s, 3 concurrent slices 0.63 s.
+# A too-low budget only forfeits latency, never correctness (every slice
+# runs the same kernel over whole qids).
 _FAST_PARTIALS_MAX_POSTINGS = 6_000_000
-
-# largest number of volume-balanced qid slices an interactive batch is split
-# into when it overflows _FAST_PARTIALS_MAX_POSTINGS: each slice is an
-# independent shuffle-free single-stage job and the slices run CONCURRENTLY
-# (guide §2.6 — Spark schedules many jobs in one application; later jobs
-# back-fill executors freed by earlier jobs' tails), so batch parallelism is
-# n_slices x n_shards with no exchange and no per-query broadcast. Measured
-# same-session at 500k docs / 20 queries / sum(df) 17.7M: grouped exchange
-# 0.99 s, one single-stage job 1.11 s, 3 concurrent slices 0.63 s. Past the
-# cap (enormous <=256-qid batches) the grouped exchange plan takes over —
-# its qids x shards kernels spread over a whole cluster.
-_MAX_PARTIAL_SLICES = 32
 
 # largest driver-side row set rendered as an inline SQL VALUES relation.
 # createDataFrame parallelizes rows into an RDD-backed plan, so broadcasting
@@ -761,7 +727,8 @@ def in_expr(col_name: str, ids) -> "F.Column":
     coerce to the column type exactly as isin's typed literals do, so
     plans, pushdown, and results are identical. Integer ids only."""
     ids = list(ids)
-    assert ids, "in_expr needs a non-empty id list"
+    if not ids:
+        raise ValueError("in_expr needs a non-empty id list")
     return F.expr(f"{col_name} IN ({','.join(str(int(i)) for i in ids)})")
 
 
@@ -802,38 +769,21 @@ def _bounded_cache_fill(cache: dict, keys, fetch, cap: int = 4_000_000) -> None:
     fetch(missing)
 
 
-def _driver_finish_topk(
-    handle: IndexHandle, partial: DataFrame, k: int
-) -> DataFrame:
-    """Coordinator merge for interactive batches: collect the per-(qid, shard)
-    WAND partials (bounded: qids x shards x (k+32) rows), trim each query to
-    its k-boundary tie class, resolve ONLY the surviving ordinals against the
-    docmap via an isin-pruned scan, and rank driver-side.
-
-    This is how a search head works (the coordinator merges shard results);
-    the distributed tail it replaces joined a handful of partial rows against
-    the FULL docmap — a broadcast either way at test scale, but at 10^12 docs
-    resolving a few hundred ordinals must be a point lookup (row-group stat
-    skipping on the ord column), not a docmap-wide join, and the window that
-    ranked them was one more shuffle stage of pure scheduling overhead.
-
-    Parity with the distributed tail (what the 49 driver gates + the
-    indexed-vs-exhaustive pytest checks hash): kernel scores are already
-    HALF_UP-rounded at SCORE_DECIMALS by ``_score_group_kernel`` (the
-    distributed tail's F.round on them is an identity), shards hold disjoint
-    doc sets so merge is a union, and (score desc, doc_id asc) is a total
-    order — Python's sort over identical float64 values reproduces the
-    row_number window bit-for-bit.
-    """
-    return _driver_finish_rows(handle, partial.collect(), k)
-
-
 def _driver_finish_rows(handle: IndexHandle, rows: list, k: int) -> DataFrame:
-    """Coordinator merge over already-collected partial rows (see
-    _driver_finish_topk; the sliced-batch path collects its slices
-    concurrently and merges the concatenation here — a qid's every
-    (qid, shard) partial lives in exactly one slice, so the row multiset
-    is identical to the single-job plan's)."""
+    """Coordinator merge of the interactive route: take the collected
+    per-(qid, shard) partial rows (bounded: qids x shards x (k+32) rows;
+    the concatenation of every qid slice's rows), trim each query to its
+    k-boundary tie class, resolve ONLY the surviving ordinals against the
+    docmap via an isin-pruned scan, and rank driver-side — how a search
+    head merges shard results, with a point lookup in place of a
+    docmap-wide join and no window stage.
+
+    Parity with the exchange route's distributed tail: kernel scores are
+    already HALF_UP-rounded at SCORE_DECIMALS by ``_score_blocks`` (the
+    tail's F.round on them is an identity), shards hold disjoint doc sets
+    so merge is a union, and (score desc, doc_id asc) is a total order —
+    Python's sort over identical float64 values reproduces the row_number
+    window bit-for-bit."""
     by_qid: dict[int, list] = {}
     for r in rows:
         by_qid.setdefault(r.qid, []).append((r.score, r.ord))
@@ -897,48 +847,6 @@ def _driver_finish_rows(handle: IndexHandle, rows: list, k: int) -> DataFrame:
     return df
 
 
-def _candidate_blocks(
-    handle: IndexHandle, queries: DataFrame
-) -> tuple[DataFrame | None, list[int] | None]:
-    """Postings blocks for query terms, tagged with qid + idf.
-
-    Returns ``(cand, qids)``: ``cand`` is None when the batch tokenizes to
-    no scoreable terms at all (nothing to scan for); ``qids`` is the sorted
-    distinct qid list when the interactive probe fully materialized the
-    batch (the caller can then finish top-k resolution driver-side), else
-    None.
-
-    Query text is tokenized with the SAME mode the index was built with
-    (IndexMeta.tokenizer_mode): on a code/code2 index the postings hold
-    lowercased (sub)tokens, so a whitespace split of 'parseHTTPServer'
-    would match nothing. Terms are hashed to term_id (the same pure
-    xxhash64 the build uses — no lookup needed).
-
-    Pushdown strategy (interactive path): the term_id IN (...) filter is
-    pushed into the parquet scan as int min/max row-group stat skipping;
-    the bytes column is read only for surviving blocks' row groups. qterms
-    and dictionary are broadcast. The probe that builds the IN list is ONE
-    narrow job (explode + hash + limit-collect, no shuffle): small batches
-    are fully materialized by it, so the (qid, term_id) dedupe happens in
-    Python and qt becomes a driver-local relation whose broadcast schedules
-    no extra job. On this path fixed per-job overhead is the dominant share
-    of single-query latency — the previous shape (distributed distinct +
-    collect, then a dictionary-presence probe collect) spent two shuffling
-    jobs per batch learning what one narrow job already knows. A batch that
-    overflows the cap (offline scoring of huge query logs) switches to a
-    broadcast hash semi-join on term_id — no driver round-trip, no giant
-    literal list in the plan; routing on PAIR count rather than
-    distinct-term count only moves the heuristic boundary (interactive
-    batches sit orders of magnitude below it, query logs orders above).
-    """
-    trip = _interactive_trip(handle, queries)
-    if trip is _BULK:
-        return _bulk_candidate_blocks(handle, queries), None
-    if not trip:
-        return None, None
-    return _cand_from_trip(handle, trip), sorted({t[0] for t in trip})
-
-
 # sentinel: the batch overflowed the interactive caps (offline query log)
 _BULK = object()
 
@@ -967,7 +875,7 @@ def _interactive_trip(handle: IndexHandle, queries: DataFrame):
     logic as a Catalyst parse + constant-fold over a VALUES LocalRelation,
     which is job-free but still cost 55-65 ms of driver latency per query
     — the dominant share of the warm all-OOV floor and ~22% of a warm
-    scoring query (round-6 probe_breakdown measurement).
+    scoring query (round-6 measurement).
 
     df AND idf come from the handle's hot cache; misses are batch-fetched
     in ONE pruned dictionary scan whose projection computes idf with the
@@ -1062,7 +970,7 @@ def _bulk_candidate_blocks(handle: IndexHandle, queries: DataFrame) -> DataFrame
 
 
 def _cand_from_trip(handle: IndexHandle, trip: list[tuple]) -> DataFrame:
-    """Interactive candidate frame for the grouped (distributed-tail) plan:
+    """Candidate frame of an interactive-size batch for the exchange route:
     postings pruned by a term_id IN literal (parquet / cached-batch stat
     skipping) joined to the broadcast local qt relation. idf doubles were
     already evaluated by the JVM in the dictionary fetch; they ride repr()
@@ -1086,40 +994,29 @@ def _cand_from_trip(handle: IndexHandle, trip: list[tuple]) -> DataFrame:
     )
 
 
-def _interactive_partials(
-    handle: IndexHandle,
-    trip: list[tuple],
+def _partials_kernel(
+    expand,
     keep_n: int,
     k1: float,
     b: float,
+    avgdl: float,
     use_wand: bool,
-) -> DataFrame:
-    """No-shuffle per-(qid, shard) WAND partials for interactive batches.
+    stats: bool = False,
+):
+    """The one per-(qid, shard) scoring kernel, as a ``mapInArrow`` body.
 
-    The grouped plan (scan -> Exchange hashpartitioning(qid, shard) ->
-    applyInPandas) pays a full shuffle stage plus a per-query broadcast
-    join for what is, per query, a few thousand metadata rows — on a warm
-    cached index that shuffle is the dominant share of single-query
-    latency (guide §2.4: remove shuffles outright where the data is
-    already partitioned as needed). Here the postings are scanned in the
-    shard-clustered layout (IndexHandle.shard_clustered: every partition
-    holds complete shards), so one mapInArrow pass computes the exact
-    per-(qid, shard) partials with ZERO exchanges: the query->term->idf
-    mapping rides the task closure (a few hundred bytes — no broadcast
-    build, no join), and rows are regrouped per shard in NumPy. Partial
-    exactness is unchanged — it only ever needed all of a shard's blocks
-    together, which the partition layout now guarantees.
+    The partition's block rows are concatenated once; ``expand(tab, terms)
+    -> (rows, qids, idfs)`` lists every (block row, qid) pair to score and
+    its idf — the only step that differs between the two query routes.
+    One lexsort by (shard, qid, term_id, first_doc) then lays every
+    (qid, shard) group out contiguously, in the same block order on both
+    routes, and ``_score_blocks`` scores each group with the same
+    ``keep_n`` cut. A partial is exact as long as the partition holds all
+    of a (qid, shard) group's blocks, which both routes guarantee.
 
-    1 Spark stage per query vs 2 + exchange before; scores are identical
-    by construction (_score_blocks is the same kernel both plans call).
-    """
+    Emits (qid, ord, score) partial rows, or with ``stats`` one
+    (qid, shard, n_blocks, n_decoded) row per group."""
     import pyarrow as pa
-
-    by_term: dict[int, list[tuple[int, float]]] = {}
-    for q, t, _, idf_v in trip:
-        by_term.setdefault(t, []).append((q, idf_v))
-    present = sorted(by_term)
-    avgdl = handle.meta.avgdl
 
     def kernel(batches):
         tabs = [pa.Table.from_batches([rb]) for rb in batches if rb.num_rows]
@@ -1134,53 +1031,85 @@ def _interactive_partials(
         mtf = tab.column("max_tf").to_numpy().astype(np.float64)
         mdl = tab.column("min_dl").to_numpy().astype(np.float64)
         byte_arr = tab.column("bytes").combine_chunks()
-        out_q, out_o, out_s = [], [], []
-        order = np.argsort(shards, kind="stable")
-        sh_sorted = shards[order]
-        sh_start = np.nonzero(np.r_[True, sh_sorted[1:] != sh_sorted[:-1]])[0]
-        sh_end = np.r_[sh_start[1:], len(sh_sorted)]
-        for s0, e0 in zip(sh_start, sh_end):
-            rows_sh = order[s0:e0]
-            t_sh = terms[rows_sh]
-            t_order = np.argsort(t_sh, kind="stable")
-            t_sorted = t_sh[t_order]
-            t_start = np.nonzero(np.r_[True, t_sorted[1:] != t_sorted[:-1]])[0]
-            t_end = np.r_[t_start[1:], len(t_sorted)]
-            term_rows = {
-                int(t_sorted[i0]): rows_sh[t_order[i0:i1]]
-                for i0, i1 in zip(t_start, t_end)
-            }
-            per_qid: dict[int, tuple[list, list]] = {}
-            for t, rows_t in term_rows.items():
-                for q, idf_v in by_term[t]:
-                    acc = per_qid.setdefault(q, ([], []))
-                    acc[0].append(rows_t)
-                    acc[1].append(np.full(len(rows_t), idf_v))
-            for q, (rlist, ilist) in per_qid.items():
-                rq = np.concatenate(rlist)
-                ords, scores, _, _ = _score_blocks(
-                    np.concatenate(ilist),
-                    mtf[rq], mdl[rq], first[rq], last[rq], terms[rq], ns[rq],
-                    lambda i, rq=rq: byte_arr[int(rq[i])].as_py(),
-                    k=keep_n, k1=k1, b=b, avgdl=avgdl, use_wand=use_wand,
-                )
-                if len(ords):
-                    out_q.append(np.full(len(ords), q, dtype=np.int64))
-                    out_o.append(ords)
-                    out_s.append(scores)
-        if out_q:
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(np.concatenate(out_q)),
-                    pa.array(np.concatenate(out_o)),
-                    pa.array(np.concatenate(out_s)),
-                ],
-                names=["qid", "ord", "score"],
+        rows, qids, idfs = expand(tab, terms)
+        order = np.lexsort((first[rows], terms[rows], qids, shards[rows]))
+        rows, qids, idfs = rows[order], qids[order], idfs[order]
+        sh = shards[rows]
+        starts = np.nonzero(
+            np.r_[True, (sh[1:] != sh[:-1]) | (qids[1:] != qids[:-1])]
+        )[0]
+        ends = np.r_[starts[1:], len(rows)]
+        out: list[tuple] = []
+        for g0, g1 in zip(starts, ends):
+            rq = rows[g0:g1]
+            ords, scores, nb, ndec = _score_blocks(
+                idfs[g0:g1],
+                mtf[rq], mdl[rq], first[rq], last[rq], terms[rq], ns[rq],
+                lambda i, rq=rq: byte_arr[int(rq[i])].as_py(),
+                k=keep_n, k1=k1, b=b, avgdl=avgdl, use_wand=use_wand,
             )
+            if stats:
+                out.append(([qids[g0]], [sh[g0]], [nb], [ndec]))
+            elif len(ords):
+                out.append((np.full(len(ords), qids[g0]), ords, scores))
+        if not out:
+            return
+        cols = [np.concatenate(c) for c in zip(*out)]
+        if stats:
+            names = ["qid", "shard", "n_blocks", "n_decoded"]
+            types = [np.int64, np.int32, np.int64, np.int64]
+        else:
+            names, types = ["qid", "ord", "score"], [np.int64, np.int64, np.float64]
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(c.astype(t, copy=False)) for c, t in zip(cols, types)],
+            names=names,
+        )
 
+    return kernel
+
+
+def _interactive_partials(
+    handle: IndexHandle,
+    trip: list[tuple],
+    keep_n: int,
+    k1: float,
+    b: float,
+    use_wand: bool,
+) -> DataFrame:
+    """Interactive route: per-(qid, shard) partials with no exchange.
+
+    The postings are scanned in the shard-clustered layout
+    (IndexHandle.shard_clustered: every partition holds complete shards),
+    so one mapInArrow pass over the term-pruned scan scores every
+    (qid, shard) group in place. The term -> [(qid, idf)] map rides the
+    task closure (a few hundred bytes: no broadcast, no join) and expands
+    each block row into the qids that need it. One Spark stage per batch.
+    """
+    by_term: dict[int, list[tuple[int, float]]] = {}
+    for q, t, _, idf_v in trip:
+        by_term.setdefault(t, []).append((q, idf_v))
+
+    def expand(tab, terms):
+        # the scan is filtered to by_term's keys, so every row maps
+        order = np.argsort(terms, kind="stable")
+        uniq, start, cnt = np.unique(
+            terms[order], return_index=True, return_counts=True
+        )
+        rows, qids, idfs = [], [], []
+        for t, s, c in zip(uniq, start, cnt):
+            rt = order[s : s + c]
+            for q, idf_v in by_term[int(t)]:
+                rows.append(rt)
+                qids.append(np.full(c, q, dtype=np.int64))
+                idfs.append(np.full(c, idf_v))
+        return np.concatenate(rows), np.concatenate(qids), np.concatenate(idfs)
+
+    kernel = _partials_kernel(
+        expand, keep_n, k1, b, handle.meta.avgdl, use_wand
+    )
     return (
         handle.shard_clustered()
-        .filter(in_expr("term_id", present))
+        .filter(in_expr("term_id", sorted(by_term)))
         .select(
             "term_id", "shard", "first_doc", "last_doc", "n",
             "max_tf", "min_dl", "bytes",
@@ -1189,38 +1118,43 @@ def _interactive_partials(
     )
 
 
-def _sliced_partial_rows(
+def _interactive_partial_rows(
     handle: IndexHandle,
     trip: list[tuple],
-    n_slices: int,
     keep_n: int,
     k1: float,
     b: float,
     use_wand: bool,
 ) -> list:
-    """Split an interactive batch into ``n_slices`` volume-balanced qid
-    slices (greedy LPT over per-qid sum(df)), run each slice's shuffle-free
-    single-stage partials as an independent Spark job, CONCURRENTLY, and
-    return the concatenated partial rows for the coordinator merge.
+    """Collected partial rows of an interactive batch, for the coordinator
+    merge. The batch splits into min(ceil(sum(df) / budget), n_qids)
+    volume-balanced qid slices (greedy LPT over per-qid sum(df); the
+    budget is _FAST_PARTIALS_MAX_POSTINGS). One slice runs inline; several
+    run as independent single-stage jobs, CONCURRENTLY, so batch
+    parallelism is n_slices x n_shards with no exchange.
 
     Exactness: slices partition whole qids, so every (qid, shard) partial
-    is computed by exactly one slice from exactly the rows the single-job
-    plan would feed it — the merged row multiset is identical (pinned by
-    test_sliced_batch_matches_grouped_and_distributed).
-    """
+    is computed by exactly one slice from exactly the rows one job over
+    the whole batch would feed it."""
     per_qid: dict[int, list[tuple]] = {}
     for tup in trip:
         per_qid.setdefault(tup[0], []).append(tup)
+    n_slices = min(
+        -(-sum(t[2] for t in trip) // _FAST_PARTIALS_MAX_POSTINGS), len(per_qid)
+    )
+    if n_slices <= 1:
+        return _interactive_partials(
+            handle, trip, keep_n, k1, b, use_wand
+        ).collect()
     loads = sorted(
         ((sum(t[2] for t in v), q) for q, v in per_qid.items()), reverse=True
     )
-    bins: list[list] = [[] for _ in range(min(n_slices, len(per_qid)))]
-    fill = [0] * len(bins)
+    slices: list[list] = [[] for _ in range(n_slices)]
+    fill = [0] * n_slices
     for load, q in loads:
-        i = min(range(len(bins)), key=fill.__getitem__)
+        i = min(range(n_slices), key=fill.__getitem__)
         fill[i] += load
-        bins[i].extend(per_qid[q])
-    slices = [b_ for b_ in bins if b_]
+        slices[i].extend(per_qid[q])
     # build the shard view once before the pool: concurrent first calls
     # would benignly race the cached-view memo
     handle.shard_clustered()
@@ -1230,38 +1164,46 @@ def _sliced_partial_rows(
             handle, sl, keep_n, k1, b, use_wand
         ).collect()
 
-    with ThreadPoolExecutor(max_workers=min(len(slices), 8)) as ex:
+    with ThreadPoolExecutor(max_workers=min(n_slices, 8)) as ex:
         return [r for rs in ex.map(run, slices) for r in rs]
 
 
-def _grouped_partials(
+def _exchange_partials(
     handle: IndexHandle,
     cand: DataFrame,
     keep_n: int,
     k1: float,
     b: float,
     use_wand: bool,
+    stats: bool = False,
 ) -> DataFrame:
-    """Exchange-based per-(qid, shard) WAND partials: the plan that spreads
-    qids x shards kernel groups over the whole cluster (batches and the
-    offline bulk path)."""
-    avgdl = handle.meta.avgdl
-
-    def run(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        ords, scores, _, _ = _score_group_kernel(
-            pdf, k=keep_n, k1=k1, b=b, avgdl=avgdl, use_wand=use_wand
+    """Exchange route: the candidate frame (block rows tagged with qid +
+    idf) is hash-partitioned on (qid, shard), which co-locates each
+    group's blocks and spreads the qids x shards groups over the whole
+    cluster; the same kernel then scores every group in a partition,
+    reading each row's (qid, idf) from its columns."""
+    kernel = _partials_kernel(
+        lambda tab, terms: (
+            np.arange(len(terms)),
+            tab.column("qid").to_numpy(),
+            tab.column("idf").to_numpy(),
+        ),
+        keep_n, k1, b, handle.meta.avgdl, use_wand, stats,
+    )
+    # explicit projection: the candidate frame still carries block_id,
+    # which the kernel never reads and the exchange need not ship
+    return (
+        cand.select(
+            "qid", "idf", "term_id", "shard", "first_doc", "last_doc", "n",
+            "max_tf", "min_dl", "bytes",
         )
-        return pd.DataFrame({"qid": key[0], "ord": ords, "score": scores})
-
-    # explicit projection: applyInPandas ships every input column through
-    # Arrow, and the candidate frame still carries block_id, which the
-    # kernel never reads (guide §4.1 — pass only what the function needs)
-    cols = [
-        "qid", "shard", "term_id", "idf", "first_doc", "last_doc",
-        "n", "max_tf", "min_dl", "bytes",
-    ]
-    return cand.select(*cols).groupBy("qid", "shard").applyInPandas(
-        run, schema="qid long, ord long, score double"
+        .repartition("qid", "shard")
+        .mapInArrow(
+            kernel,
+            schema="qid long, shard int, n_blocks long, n_decoded long"
+            if stats
+            else "qid long, ord long, score double",
+        )
     )
 
 
@@ -1279,21 +1221,24 @@ def bm25_topk_indexed(
     as the exhaustive tf-frame ``bm25.bm25_topk``. Pass an ``IndexHandle``
     (optionally .cache()d) to amortize index loading across queries.
 
-    ``finish`` selects the top-k tail after the per-(qid, shard) WAND
-    partials: ``"auto"`` (default) uses the coordinator merge for
-    interactive batches (<= _DRIVER_FINISH_MAX_QIDS qids) and the
-    distributed docmap-join + window tail otherwise; ``"distributed"`` /
-    ``"driver"`` force one side — the distributed tail is the plan offline
-    million-query logs run on a cluster, so it is independently driver-gated
-    (``bm25_topk_wand_distributed``) rather than only reachable past the
-    batch-size threshold. Both finishes are bit-identical by construction
-    (see _driver_finish_topk) and pinned so by
-    test_driver_finish_matches_distributed_tail."""
-    if finish not in ("auto", "driver", "distributed"):
-        raise ValueError(f"finish must be auto|driver|distributed, got {finish!r}")
+    Two routes, one scoring kernel (_partials_kernel):
+      * interactive — ``finish="auto"`` and at most _DRIVER_FINISH_MAX_QIDS
+        qids: qid slices over the shard-clustered view with no exchange
+        (_interactive_partial_rows), then the coordinator merge
+        (_driver_finish_rows);
+      * exchange — everything else (``finish="distributed"``, larger
+        batches, offline query logs): the candidate frame hash-partitioned
+        on (qid, shard), the same kernel, then the distributed docmap join
+        + per-qid window. This is the plan offline million-query logs run
+        on a cluster, so ``finish="distributed"`` makes it independently
+        driver-gated (``bm25_topk_wand_distributed``).
+    Both routes are bit-identical (pinned against ``bm25.bm25_topk`` by
+    test_routes_match_tf_frame)."""
+    if finish not in ("auto", "distributed"):
+        raise ValueError(f"finish must be auto|distributed, got {finish!r}")
     if k < 1:
-        # the driver finish would slice nonsense (scores[k-1] wraps negative)
-        # while the distributed window returns empty — fail loudly instead
+        # the coordinator merge would slice nonsense (scores[k-1] wraps
+        # negative) while the distributed window returns empty — fail loudly
         raise ValueError(f"k must be >= 1, got {k}")
     handle = IndexHandle(spark, index) if isinstance(index, str) else index
     use_wand = method == "wand"
@@ -1305,43 +1250,19 @@ def bm25_topk_indexed(
     keep_n = k + 32
 
     trip = _interactive_trip(handle, queries)
-    if trip is not _BULK:
-        if not trip:
-            df = _empty_topk_df(spark)
-            df._spark_graft_local_topk = []
-            return df
-        qids = sorted({t[0] for t in trip})
-        if finish != "distributed" and len(qids) <= _DRIVER_FINISH_MAX_QIDS:
-            # interactive fast paths: shuffle-free per-(qid, shard) partials
-            # over the shard-clustered postings + coordinator merge. Small
-            # workloads run as ONE single-stage job; larger batches split
-            # into volume-balanced qid slices run as concurrent single-stage
-            # jobs (parallelism n_slices x n_shards, still zero exchanges);
-            # only single-qid overflows and batches past the slice cap take
-            # the grouped exchange plan.
-            total_df = sum(t[2] for t in trip)
-            n_slices = -(-total_df // _FAST_PARTIALS_MAX_POSTINGS)
-            if n_slices <= 1:
-                partial = _interactive_partials(
-                    handle, trip, keep_n, k1, b, use_wand
-                )
-                return _driver_finish_topk(handle, partial, k)
-            if len(qids) > 1 and n_slices <= _MAX_PARTIAL_SLICES:
-                rows = _sliced_partial_rows(
-                    handle, trip, n_slices, keep_n, k1, b, use_wand
-                )
-                return _driver_finish_rows(handle, rows, k)
-        cand = _cand_from_trip(handle, trip)
-        if finish != "distributed" and len(qids) <= _DRIVER_FINISH_MAX_QIDS:
-            partial = _grouped_partials(handle, cand, keep_n, k1, b, use_wand)
-            return _driver_finish_topk(handle, partial, k)
-    else:
+    if trip is _BULK:
         cand = _bulk_candidate_blocks(handle, queries)
-        qids = None
+    elif not trip:
+        df = _empty_topk_df(spark)
+        df._spark_graft_local_topk = []
+        return df
+    elif finish == "auto" and len({t[0] for t in trip}) <= _DRIVER_FINISH_MAX_QIDS:
+        rows = _interactive_partial_rows(handle, trip, keep_n, k1, b, use_wand)
+        return _driver_finish_rows(handle, rows, k)
+    else:
+        cand = _cand_from_trip(handle, trip)
 
-    partial = _grouped_partials(handle, cand, keep_n, k1, b, use_wand)
-    if finish == "driver":
-        return _driver_finish_topk(handle, partial, k)
+    partial = _exchange_partials(handle, cand, keep_n, k1, b, use_wand)
     resolved = partial.join(handle.docmap, "ord").select("qid", "doc_id", "score")
     ranked = grouped_topk(
         resolved.withColumn("score", F.round("score", SCORE_DECIMALS)),
@@ -1360,23 +1281,17 @@ def wand_block_stats(
     k1: float = K1_DEFAULT,
     b: float = B_DEFAULT,
 ) -> DataFrame:
-    """Diagnostics: per (qid, shard) blocks seen vs decoded under WAND."""
+    """Diagnostics: per (qid, shard) blocks seen vs decoded under WAND, cut
+    at ``k``, from the exchange route's kernel."""
     handle = IndexHandle(spark, index) if isinstance(index, str) else index
-    meta = handle.meta
-    cand, _ = _candidate_blocks(handle, queries)
-    if cand is None:
+    trip = _interactive_trip(handle, queries)
+    if not trip:
         return spark.createDataFrame(
             [], schema="qid long, shard int, n_blocks long, n_decoded long"
         )
-
-    def run(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        _, _, nb, ndec = _score_group_kernel(
-            pdf, k=k, k1=k1, b=b, avgdl=meta.avgdl, use_wand=True
-        )
-        return pd.DataFrame(
-            {"qid": [key[0]], "shard": [key[1]], "n_blocks": [nb], "n_decoded": [ndec]}
-        )
-
-    return cand.groupBy("qid", "shard").applyInPandas(
-        run, schema="qid long, shard int, n_blocks long, n_decoded long"
+    cand = (
+        _bulk_candidate_blocks(handle, queries)
+        if trip is _BULK
+        else _cand_from_trip(handle, trip)
     )
+    return _exchange_partials(handle, cand, k, k1, b, True, stats=True)

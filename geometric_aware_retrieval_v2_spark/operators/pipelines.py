@@ -152,7 +152,7 @@ def _geodesic_local_finish(
     rounded = [
         r.g
         for r in spark.sql(
-            "SELECT round(col1, 6) AS g FROM VALUES "
+            f"SELECT round(col1, {rerank.SCORE_DECIMALS}) AS g FROM VALUES "
             + ",".join(f"(CAST('{g!r}' AS DOUBLE))" for g in raw)
         ).collect()
     ]

@@ -124,7 +124,11 @@ def _kernel_factored_cos(
             ids = tab.column(id_col).to_numpy().astype(np.int64, copy=False)
             col = tab.column(vec_col).combine_chunks()
             flat = col.flatten()
-            if col.null_count or flat.null_count or len(flat) != len(ids) * d:
+            # per-row lengths, not len(flat): rows of d - 1 and d + 1
+            # balance out in the flattened length and would misalign
+            if col.null_count or flat.null_count or np.any(
+                col.value_lengths().to_numpy(zero_copy_only=False) != d
+            ):
                 raise NotImplementedError(
                     "null or ragged embedding vectors (fixed-dim contract)"
                 )

@@ -96,26 +96,13 @@ def main(suffix: str) -> None:
     # the interactive result is a LocalRelation built from collected partials;
     # the plan worth recording is the PARTIAL computation feeding it
     from geometric_aware_retrieval_v2_spark.operators import index as idx_mod
-    if hasattr(idx_mod, "_interactive_trip"):
-        trip = idx_mod._interactive_trip(dh, one_q)
-        if trip is not idx_mod._BULK and trip:
-            dump("wand_partials", idx_mod._interactive_partials(
-                dh, trip, 42, 1.2, 0.75, True), suffix)
-            cand = idx_mod._cand_from_trip(dh, trip)
-    else:
-        cand, _ = idx_mod._candidate_blocks(dh, one_q)
-    if cand is not None:
-        import pandas as pd
-
-        avgdl = dh.meta.avgdl
-
-        def run(key, pdf):
-            ords, scores, _, _ = idx_mod._score_group_kernel(
-                pdf, k=42, k1=1.2, b=0.75, avgdl=avgdl, use_wand=True)
-            return pd.DataFrame({"qid": key[0], "ord": ords, "score": scores})
-
-        dump("wand_grouped_partials", cand.groupBy("qid", "shard").applyInPandas(
-            run, schema="qid long, ord long, score double"), suffix)
+    trip = idx_mod._interactive_trip(dh, one_q)
+    if trip is not idx_mod._BULK and trip:
+        dump("wand_partials", idx_mod._interactive_partials(
+            dh, trip, 42, 1.2, 0.75, True), suffix)
+        dump("wand_exchange_partials", idx_mod._exchange_partials(
+            dh, idx_mod._cand_from_trip(dh, trip), 42, 1.2, 0.75, True),
+            suffix)
     dump("bm25_topk_wand_distributed", bm25_topk_indexed(
         spark, dh, queries_df(spark), k=10, method="wand",
         finish="distributed"), suffix)

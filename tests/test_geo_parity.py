@@ -124,6 +124,23 @@ def test_cosine_kernel_matches_hof(spark):
     )._jdf.queryExecution().executedPlan().toString()
 
 
+def test_cosine_kernel_rejects_ragged_rows(spark):
+    """Rows of length d - 1 and d + 1 in one Arrow batch keep the flattened
+    length at rows x d, so only a per-row length check catches them; the
+    kernel must fail loudly instead of scoring misaligned vectors."""
+    from geometric_aware_retrieval_v2_spark.operators.rerank import (
+        _kernel_factored_cos,
+    )
+
+    d = 4
+    emb = spark.createDataFrame(
+        [(0, [1.0] * (d - 1)), (1, [1.0] * (d + 1))],
+        schema="vec_id long, embedding array<double>",
+    ).coalesce(1)
+    with pytest.raises(Exception, match="ragged"):
+        _kernel_factored_cos(emb, "vec_id", "embedding", [(0, [1.0] * d)]).collect()
+
+
 @pytest.fixture(scope="module")
 def candidates_df(spark, emb_df, qvecs_df):
     """Per-query cosine top-50 joined with vectors: (qid, doc_id, embedding, qvec)."""

@@ -222,82 +222,111 @@ def test_pack_width_bounds_buffer_and_preserves_postings(spark, index_dir):
     )
 
 
-def test_fast_partials_match_grouped_and_distributed(spark, index_dir):
-    """The shuffle-free single-stage partials (batches <= _FAST_PARTIALS_
-    MAX_QIDS), the grouped-exchange driver finish, and the fully distributed
-    tail must be bit-identical on the same small batch — all three consume
-    the same _score_blocks kernel, and this pins the routing seams."""
+_ROUTE_BATCH = [
+    (1, "hash join"), (2, "table scan"), (3, "merge sort"),
+    (9, "the a"), (11, "nosuchterm zzz"),
+]
+
+
+@pytest.mark.parametrize("method", ["wand", "exhaustive"])
+@pytest.mark.parametrize(
+    "route",
+    ["one_slice", "slices", "one_qid_over_budget", "exchange_cap0",
+     "exchange_distributed"],
+)
+def test_routes_match_tf_frame(spark, index_dir, monkeypatch, route, method):
+    """Every query route — the interactive route as one inline slice, as
+    several concurrent qid slices, and with a single qid over the slice
+    budget; the exchange route reached through the qid cap and through
+    finish="distributed" — returns exactly the tf-frame ``bm25.bm25_topk``
+    rows. A spy pins which route each case took."""
     from geometric_aware_retrieval_v2_spark.localrel import local_queries_df
     from geometric_aware_retrieval_v2_spark.operators import index as ix
 
-    small = local_queries_df(
-        spark, [(1, "hash join"), (2, "table scan"), (9, "the a")]
-    )
-    h0 = ix.IndexHandle(spark, index_dir)
-    assert (
-        sum(t[2] for t in ix._interactive_trip(h0, small))
-        <= ix._FAST_PARTIALS_MAX_POSTINGS
-    ), "fixture batch must route through the single-stage plan"
-    fast = _collect_topk(bm25_topk_indexed(spark, index_dir, small, k=10))
-    dist = _collect_topk(
-        bm25_topk_indexed(spark, index_dir, small, k=10, finish="distributed")
-    )
-    assert fast == dist and len(fast) > 0
-    # grouped + driver finish (what 5..256-qid batches run)
+    rows = [(9, "the a")] if route == "one_qid_over_budget" else _ROUTE_BATCH
+    queries = local_queries_df(spark, rows)
     h = ix.IndexHandle(spark, index_dir)
-    trip = ix._interactive_trip(h, small)
-    partial = ix._grouped_partials(
-        h, ix._cand_from_trip(h, trip), 42, 1.2, 0.75, True
-    )
-    grouped = sorted(
-        (r.qid, r.doc_id, r.score, r.rank)
-        for r in ix._driver_finish_topk(h, partial, 10).collect()
-    )
-    assert grouped == fast
+    total_df = sum(t[2] for t in ix._interactive_trip(h, queries))
+    assert 3 < total_df <= ix._FAST_PARTIALS_MAX_POSTINGS
+    finish = "auto"
+    if route == "slices":
+        monkeypatch.setattr(ix, "_FAST_PARTIALS_MAX_POSTINGS", total_df // 3)
+    elif route == "one_qid_over_budget":
+        monkeypatch.setattr(ix, "_FAST_PARTIALS_MAX_POSTINGS", 1)
+    elif route == "exchange_cap0":
+        monkeypatch.setattr(ix, "_DRIVER_FINISH_MAX_QIDS", 0)
+    elif route == "exchange_distributed":
+        finish = "distributed"
+    calls = []  # list.append is atomic across the slice threads
 
+    def spy(fn):
+        def wrapped(*a, **kw):
+            calls.append(fn.__name__)
+            return fn(*a, **kw)
+        monkeypatch.setattr(ix, fn.__name__, wrapped)
 
-def test_sliced_batch_matches_grouped_and_distributed(spark, index_dir, monkeypatch):
-    """Batches whose sum(df) overflows _FAST_PARTIALS_MAX_POSTINGS split into
-    volume-balanced qid slices run as concurrent single-stage jobs. Force the
-    sliced route by shrinking the threshold and pin it bit-identical to the
-    single-job fast path, the grouped driver finish, and the distributed tail."""
-    from geometric_aware_retrieval_v2_spark.localrel import local_queries_df
-    from geometric_aware_retrieval_v2_spark.operators import index as ix
-
-    batch = local_queries_df(
-        spark, [(1, "hash join"), (2, "table scan"), (3, "merge sort"),
-                (9, "the a"), (11, "nosuchterm zzz")]
+    spy(ix._interactive_partials)
+    spy(ix._exchange_partials)
+    got = _collect_topk(
+        bm25_topk_indexed(spark, h, queries, k=10, method=method, finish=finish)
     )
+    n_int = calls.count("_interactive_partials")
+    n_exc = calls.count("_exchange_partials")
+    if route.startswith("exchange"):
+        assert (n_int, n_exc) == (0, 1), calls
+    elif route == "slices":
+        assert n_int >= 2 and n_exc == 0, calls
+    else:
+        assert (n_int, n_exc) == (1, 0), calls
+    docs = docs_from_documents(spark, SF_SMOKE)
     want = _collect_topk(
-        bm25_topk_indexed(spark, index_dir, batch, k=10, finish="distributed")
+        bm25.bm25_topk(tokenize_terms(docs), doc_stats(docs), queries, k=10)
     )
-    h = ix.IndexHandle(spark, index_dir)
-    trip = ix._interactive_trip(h, batch)
-    total_df = sum(t[2] for t in trip)
-    assert total_df > 3, "fixture batch too small to slice meaningfully"
-    # threshold forcing ~3 slices; routing must land on _sliced_partial_rows
-    monkeypatch.setattr(ix, "_FAST_PARTIALS_MAX_POSTINGS", max(1, total_df // 3))
-    calls = []
-    orig = ix._sliced_partial_rows
-
-    def spy(*a, **kw):
-        calls.append(a[2])
-        return orig(*a, **kw)
-
-    monkeypatch.setattr(ix, "_sliced_partial_rows", spy)
-    got = _collect_topk(bm25_topk_indexed(spark, index_dir, batch, k=10))
-    assert calls and calls[0] >= 2, "sliced route did not engage"
     assert got == want and len(got) > 0
-    # direct slice-row parity: merged rows == single-job plan's rows
-    rows_sliced = sorted(
-        (r.qid, r.ord, r.score)
-        for r in orig(h, trip, 3, 42, 1.2, 0.75, True)
+
+
+def test_in_expr_rejects_empty_ids(spark):
+    """An empty IN list is a caller bug: it must raise, not parse to SQL
+    that fails later (or vanish under python -O like an assert)."""
+    from geometric_aware_retrieval_v2_spark.operators.index import in_expr
+
+    with pytest.raises(ValueError, match="non-empty"):
+        in_expr("ord", [])
+    assert spark.range(5).filter(in_expr("id", [1, 3])).count() == 2
+
+
+@pytest.mark.xfail(
+    strict=True,
+    reason="per-shard partials are cut at k + 32 on (score, ord) before the "
+    "doc_id tie-break: a boundary tie class larger than that keeps the "
+    "shortest docs, not the smallest doc_ids",
+)
+@pytest.mark.parametrize("finish", ["auto", "distributed"])
+@pytest.mark.parametrize("method", ["wand", "exhaustive"])
+def test_boundary_ties_across_doc_lengths(spark, tmp_path, method, finish):
+    """140 docs tie on the rounded score of query "x" across two doc
+    lengths: avgdl is exactly 3, so tf 1 at dl 3 and tf 2 at dl 7 give
+    tf / (tf + k1 (1 - b + b dl / avgdl)) = 1 / 2.2 for both. The dl-7 docs
+    hold the smallest doc_ids, so the exact top-10 is doc_ids 0..9; ords
+    rank dl-3 docs first, and each of the 2 shards holds ~60 of them —
+    more than k + 32."""
+    rows = (
+        [(i, "x x p p p p q") for i in range(20)]  # dl 7, tf 2
+        + [(20 + i, "x p q") for i in range(120)]  # dl 3, tf 1
+        + [(140 + i, "z") for i in range(40)]  # dl 1, no x
     )
-    rows_single = sorted(
-        (r.qid, r.ord, r.score)
-        for r in ix._interactive_partials(h, trip, 42, 1.2, 0.75, True).collect()
+    docs = spark.createDataFrame(rows, schema="doc_id long, content string")
+    d = str(tmp_path / "ties")
+    build_index(spark, docs, d, n_partitions=2, n_shards=2, block_size=16)
+    queries = spark.createDataFrame([(1, "x")], schema="qid long, text string")
+    want = _collect_topk(
+        bm25.bm25_topk(tokenize_terms(docs), doc_stats(docs), queries, k=10)
     )
-    assert rows_sliced == rows_single
+    assert [r[1] for r in want] == list(range(10))
+    got = _collect_topk(
+        bm25_topk_indexed(spark, d, queries, k=10, method=method, finish=finish)
+    )
+    assert got == want
 
 
 def test_pack_narrowed_types_identical(spark, index_dir):
