@@ -24,7 +24,8 @@ shard. One mapInArrow kernel (_partials_kernel) scores every (qid, shard)
 group of a partition in batched NumPy, and two routes feed it:
   * interactive (<= _DRIVER_FINISH_MAX_QIDS qids): a term-pruned scan of the
     shard-clustered postings, qid/idf expanded from the task closure, no
-    exchange; partial rows are collected and merged on the driver;
+    exchange; the partials come back as one Arrow table and are merged in
+    NumPy on the driver;
   * exchange (larger batches, offline logs, finish="distributed"): block
     rows joined to their (qid, idf) and hash-partitioned on (qid, shard);
     the partials are resolved by a docmap join and ranked by a window.
@@ -48,6 +49,7 @@ from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
 import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -698,23 +700,6 @@ _DRIVER_FINISH_MAX_QIDS = 256
 # runs the same kernel over whole qids).
 _FAST_PARTIALS_MAX_POSTINGS = 6_000_000
 
-# largest driver-side row set rendered as an inline SQL VALUES relation.
-# createDataFrame parallelizes rows into an RDD-backed plan, so broadcasting
-# it costs a collect job and collecting it costs a scan job; a VALUES inline
-# table is a LocalRelation — both are job-free. Past the cap the SQL text
-# (and its parse time) stops paying for itself.
-_VALUES_LOCAL_MAX_ROWS = 4096
-
-
-def _values_local_df(spark: SparkSession, rows_sql: str, proj: str) -> DataFrame:
-    """Inline-table DataFrame: stays a LocalRelation through the optimizer
-    (ConvertToLocalRelation folds the projection), unlike createDataFrame.
-    Only ever fed integer literals and repr()'d finite doubles — repr is
-    shortest-round-trip, and both the SQL double literal and CAST parse via
-    Java parseDouble, so the bits survive the text round trip exactly."""
-    return spark.sql(f"SELECT {proj} FROM VALUES {rows_sql}")
-
-
 def in_expr(col_name: str, ids) -> "F.Column":
     """``col IN (id, id, ...)`` as ONE parsed SQL expression.
 
@@ -769,81 +754,88 @@ def _bounded_cache_fill(cache: dict, keys, fetch, cap: int = 4_000_000) -> None:
     fetch(missing)
 
 
-def _driver_finish_rows(handle: IndexHandle, rows: list, k: int) -> DataFrame:
-    """Coordinator merge of the interactive route: take the collected
-    per-(qid, shard) partial rows (bounded: qids x shards x (k+32) rows;
-    the concatenation of every qid slice's rows), trim each query to its
-    k-boundary tie class, resolve ONLY the surviving ordinals against the
-    docmap via an isin-pruned scan, and rank driver-side — how a search
-    head merges shard results, with a point lookup in place of a
-    docmap-wide join and no window stage.
+def _merge_partials(partials: pa.Table, k: int, resolve) -> tuple:
+    """Coordinator merge of (qid, ord, score) partial rows, in NumPy ->
+    (qid, doc_id, score, rank) int64/int64/float64/int64 arrays ordered by
+    (qid, rank).
+
+    Each qid keeps its k-boundary tie class (every row scoring >= its k-th
+    best partial score), ``resolve(ords)`` maps the kept distinct ords
+    (sorted int64 array) to their doc_ids, and the kept rows are ranked by
+    (score desc, doc_id asc) and cut at k. Spark-free: ``resolve`` is the
+    only lookup."""
+    if not partials.num_rows:
+        e = np.empty(0, dtype=np.int64)
+        return e, e, np.empty(0, dtype=np.float64), e
+    q = partials.column("qid").to_numpy()
+    o = partials.column("ord").to_numpy()
+    s = partials.column("score").to_numpy()
+
+    def segments(qs):
+        starts = np.flatnonzero(np.r_[True, qs[1:] != qs[:-1]])
+        return starts, np.diff(np.r_[starts, len(qs)])
+
+    order = np.lexsort((-s, q))
+    q, o, s = q[order], o[order], s[order]
+    starts, counts = segments(q)
+    keep = s >= np.repeat(s[starts + np.minimum(counts, k) - 1], counts)
+    q, o, s = q[keep], o[keep], s[keep]
+    uniq, inv = np.unique(o, return_inverse=True)
+    d = np.asarray(resolve(uniq), dtype=np.int64)[inv]
+    order = np.lexsort((d, -s, q))
+    q, d, s = q[order], d[order], s[order]
+    starts, counts = segments(q)
+    rank = np.arange(len(q)) - np.repeat(starts, counts) + 1
+    cut = rank <= k
+    return q[cut], d[cut], s[cut], rank[cut]
+
+
+def _driver_finish_rows(handle: IndexHandle, partials: pa.Table, k: int) -> DataFrame:
+    """Coordinator merge of the interactive route: the per-(qid, shard)
+    partials of every qid slice arrive as one Arrow table (bounded:
+    qids x shards x (k+32) rows), are trimmed to each query's k-boundary
+    tie class and ranked in NumPy (_merge_partials), and ONLY the
+    surviving ordinals are resolved against the docmap — from the bounded
+    ``_doc_cache``, misses fetched by one isin-pruned scan. How a search
+    head merges shard results: a point lookup in place of a docmap-wide
+    join, no window stage, and an Arrow LocalRelation result whose
+    collect() schedules no job.
 
     Parity with the exchange route's distributed tail: kernel scores are
     already HALF_UP-rounded at SCORE_DECIMALS by ``_score_blocks`` (the
-    tail's F.round on them is an identity), shards hold disjoint doc sets
-    so merge is a union, and (score desc, doc_id asc) is a total order —
-    Python's sort over identical float64 values reproduces the row_number
-    window bit-for-bit."""
-    by_qid: dict[int, list] = {}
-    for r in rows:
-        by_qid.setdefault(r.qid, []).append((r.score, r.ord))
-    keep: list[tuple[int, int, float]] = []
-    for qid, lst in by_qid.items():
-        scores = sorted((s for s, _ in lst), reverse=True)
-        s_k = scores[min(k, len(scores)) - 1]
-        keep.extend((qid, o, s) for s, o in lst if s >= s_k)
-    spark = handle.spark
-    if not keep:
-        df = _empty_topk_df(spark)
-        df._spark_graft_local_topk = []
-        return df
-    ords = sorted({o for _, o, _ in keep})
+    tail's F.round on them is an identity) and keep their float64 bits
+    from the kernel to the result, shards hold disjoint doc sets so merge
+    is a union, and (score desc, doc_id asc) is a total order — the
+    lexsort reproduces the row_number window bit-for-bit."""
     dmap = handle._doc_cache
 
     def _fetch_docs(missing: list) -> None:
-        for r in (
+        tab = (
             handle.docmap.filter(in_expr("ord", missing))
             .select("ord", "doc_id")
-            .collect()
-        ):
-            dmap[r.ord] = r.doc_id
+            .toArrow()
+        )
+        dmap.update(
+            zip(tab.column("ord").to_pylist(), tab.column("doc_id").to_pylist())
+        )
 
-    _bounded_cache_fill(dmap, ords, _fetch_docs)
-    # one O(n) grouping pass — re-scanning `keep` per qid would be
-    # O(qids * qids * shards * k) of driver CPU on the interactive path
-    keep_by_qid: dict[int, list[tuple[float, int]]] = {}
-    for q, o, s in keep:
-        keep_by_qid.setdefault(q, []).append((s, o))
-    out: list[tuple[int, int, float, int]] = []
-    for qid in sorted(by_qid):
-        cands = sorted(
-            ((s, dmap[o]) for s, o in keep_by_qid[qid]),
-            key=lambda t: (-t[0], t[1]),
-        )[:k]
-        out.extend(
-            (int(qid), int(d), float(s), i + 1)
-            for i, (s, d) in enumerate(cands)
-        )
-    if len(out) <= _VALUES_LOCAL_MAX_ROWS:
-        # LocalRelation result: the caller's .collect() schedules no job,
-        # and composing pipelines broadcast it job-free too. Score doubles
-        # ride repr() (shortest-round-trip) through a CAST, bit-exact.
-        df = _values_local_df(
-            spark,
-            ",".join(
-                f"({q}L,{d}L,CAST('{s!r}' AS DOUBLE),{r}L)"
-                for q, d, s, r in out
-            ),
-            "col1 AS qid, col2 AS doc_id, col3 AS score, col4 AS `rank`",
-        )
-    else:
-        df = spark.createDataFrame(
-            out, schema="qid long, doc_id long, score double, rank long"
-        )
+    def resolve(ords: np.ndarray) -> list:
+        keys = ords.tolist()
+        _bounded_cache_fill(dmap, keys, _fetch_docs)
+        return [dmap[o] for o in keys]
+
+    q, d, s, r = _merge_partials(partials, k, resolve)
+    if not len(q):
+        df = _empty_topk_df(handle.spark)
+        df._spark_graft_local_topk = []
+        return df
+    df = localrel.local_df(handle.spark, qid=q, doc_id=d, score=s, rank=r)
     # the rows are already on the driver — expose them so composing
     # pipelines can push the candidate doc_ids into downstream scans
     # (pipelines.attach_candidates prune_ids) without re-collecting
-    df._spark_graft_local_topk = out
+    df._spark_graft_local_topk = list(
+        zip(q.tolist(), d.tolist(), s.tolist(), r.tolist())
+    )
     return df
 
 
@@ -893,6 +885,12 @@ def _interactive_trip(handle: IndexHandle, queries: DataFrame):
         if len(taken) <= _DRIVER_FINISH_MAX_QIDS:
             local_rows = [(r.qid, r.text) for r in taken]
     if local_rows is not None:
+        for q_, t_ in local_rows:
+            if q_ is None:
+                raise ValueError(
+                    f"query batch has a null qid (text {t_!r}): every query "
+                    "needs a qid"
+                )
         if not local_rows:
             return []
         # tiers 1-2: pure-Python probe, zero Catalyst work. The token-count
@@ -929,12 +927,17 @@ def _interactive_trip(handle: IndexHandle, queries: DataFrame):
         idf = F.log(
             F.lit(1.0) + (F.lit(n) - F.col("df") + 0.5) / (F.col("df") + 0.5)
         )
-        for r in (
+        tab = (
             handle.dictionary.filter(in_expr("term_id", missing))
             .select("term_id", "df", idf.alias("idf"))
-            .collect()
-        ):
-            cache[r.term_id] = (r.df, r.idf)
+            .toArrow()
+        )
+        cache.update(
+            zip(
+                tab.column("term_id").to_pylist(),
+                zip(tab.column("df").to_pylist(), tab.column("idf").to_pylist()),
+            )
+        )
         for t in missing:
             cache.setdefault(t, (0, 0.0))
 
@@ -972,23 +975,17 @@ def _bulk_candidate_blocks(handle: IndexHandle, queries: DataFrame) -> DataFrame
 def _cand_from_trip(handle: IndexHandle, trip: list[tuple]) -> DataFrame:
     """Candidate frame of an interactive-size batch for the exchange route:
     postings pruned by a term_id IN literal (parquet / cached-batch stat
-    skipping) joined to the broadcast local qt relation. idf doubles were
-    already evaluated by the JVM in the dictionary fetch; they ride repr()
-    (shortest-round-trip) through a CAST, bit-exact."""
+    skipping) joined to the broadcast (qid, term_id, idf) relation. The
+    idf doubles were evaluated by the JVM in the dictionary fetch and ride
+    an Arrow LocalRelation with their bits intact, so the broadcast needs
+    no collect job."""
     present = sorted({t for _, t, _, _ in trip})
-    if len(trip) <= _VALUES_LOCAL_MAX_ROWS:
-        qt = _values_local_df(
-            handle.spark,
-            ",".join(
-                f"({q}L,{t}L,CAST('{i!r}' AS DOUBLE))" for q, t, _, i in trip
-            ),
-            "col1 AS qid, col2 AS term_id, col3 AS idf",
-        )
-    else:
-        qt = handle.spark.createDataFrame(
-            [(q, t, i) for q, t, _, i in trip],
-            "qid long, term_id long, idf double",
-        )
+    qt = localrel.local_df(
+        handle.spark,
+        qid=pa.array([q for q, _, _, _ in trip], pa.int64()),
+        term_id=pa.array([t for _, t, _, _ in trip], pa.int64()),
+        idf=pa.array([i for _, _, _, i in trip], pa.float64()),
+    )
     return handle.postings.filter(in_expr("term_id", present)).join(
         F.broadcast(qt), "term_id"
     )
@@ -1125,12 +1122,12 @@ def _interactive_partial_rows(
     k1: float,
     b: float,
     use_wand: bool,
-) -> list:
-    """Collected partial rows of an interactive batch, for the coordinator
-    merge. The batch splits into min(ceil(sum(df) / budget), n_qids)
-    volume-balanced qid slices (greedy LPT over per-qid sum(df); the
-    budget is _FAST_PARTIALS_MAX_POSTINGS). One slice runs inline; several
-    run as independent single-stage jobs, CONCURRENTLY, so batch
+) -> pa.Table:
+    """Partial rows of an interactive batch as one Arrow table, for the
+    coordinator merge. The batch splits into min(ceil(sum(df) / budget),
+    n_qids) volume-balanced qid slices (greedy LPT over per-qid sum(df);
+    the budget is _FAST_PARTIALS_MAX_POSTINGS). One slice runs inline;
+    several run as independent single-stage jobs, CONCURRENTLY, so batch
     parallelism is n_slices x n_shards with no exchange.
 
     Exactness: slices partition whole qids, so every (qid, shard) partial
@@ -1145,7 +1142,7 @@ def _interactive_partial_rows(
     if n_slices <= 1:
         return _interactive_partials(
             handle, trip, keep_n, k1, b, use_wand
-        ).collect()
+        ).toArrow()
     loads = sorted(
         ((sum(t[2] for t in v), q) for q, v in per_qid.items()), reverse=True
     )
@@ -1159,13 +1156,13 @@ def _interactive_partial_rows(
     # would benignly race the cached-view memo
     handle.shard_clustered()
 
-    def run(sl: list) -> list:
+    def run(sl: list) -> pa.Table:
         return _interactive_partials(
             handle, sl, keep_n, k1, b, use_wand
-        ).collect()
+        ).toArrow()
 
     with ThreadPoolExecutor(max_workers=min(n_slices, 8)) as ex:
-        return [r for rs in ex.map(run, slices) for r in rs]
+        return pa.concat_tables(list(ex.map(run, slices)))
 
 
 def _exchange_partials(
@@ -1257,8 +1254,8 @@ def bm25_topk_indexed(
         df._spark_graft_local_topk = []
         return df
     elif finish == "auto" and len({t[0] for t in trip}) <= _DRIVER_FINISH_MAX_QIDS:
-        rows = _interactive_partial_rows(handle, trip, keep_n, k1, b, use_wand)
-        return _driver_finish_rows(handle, rows, k)
+        partials = _interactive_partial_rows(handle, trip, keep_n, k1, b, use_wand)
+        return _driver_finish_rows(handle, partials, k)
     else:
         cand = _cand_from_trip(handle, trip)
 

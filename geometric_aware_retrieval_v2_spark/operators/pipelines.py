@@ -26,9 +26,8 @@ from geometric_aware_retrieval_v2_spark.operators.index import in_expr
 _EMB_PRUNE_MAX_IDS = 32_768
 
 # largest interactive candidate set finished driver-side by the flagship
-# (see _geodesic_local_finish): bounds both the collected vector volume
-# (rows x d doubles) and the one-column VALUES relation that carries the
-# raw geo distances through the JVM round() fold (~55 us/row of parse)
+# (see _geodesic_local_finish): bounds the collected vector volume
+# (rows x d doubles) of its one point-lookup embedding fetch
 _LOCAL_RERANK_MAX_ROWS = 4096
 
 
@@ -93,11 +92,11 @@ def _geodesic_local_finish(
       * the kernel IS rerank._geodesic_kernel — value-identical by
         construction, and its outputs are row-order-independent (every
         selection key is a value, never a position);
-      * rounding stays JVM-side: raw distances ride repr() through a CAST
-        into a one-column VALUES relation whose round(_, 6) projection
-        folds via ConvertToLocalRelation — no job, and bit-for-bit the
-        F.round the distributed plan applies (np.round can land 1 ulp off
-        the decimal HALF_UP the driver gates hash);
+      * rounding stays JVM-side: raw distances ride a one-column Arrow
+        LocalRelation whose round(_, 6) projection folds via
+        ConvertToLocalRelation — no job, and bit-for-bit the F.round the
+        distributed plan applies (np.round can land 1 ulp off the decimal
+        HALF_UP the driver gates hash);
       * rank = sort on (rounded dist, doc_id) — a total order over exact
         float64 values, so Python's sort reproduces the row_number window.
 
@@ -148,13 +147,13 @@ def _geodesic_local_finish(
     if not outs:
         return _empty_flagship_df(spark)
     allout = pd.concat(outs, ignore_index=True)
-    raw = allout["geo_dist"].tolist()
     rounded = [
         r.g
-        for r in spark.sql(
-            f"SELECT round(col1, {rerank.SCORE_DECIMALS}) AS g FROM VALUES "
-            + ",".join(f"(CAST('{g!r}' AS DOUBLE))" for g in raw)
-        ).collect()
+        for r in localrel.local_df(
+            spark, g=allout["geo_dist"].to_numpy(dtype=np.float64)
+        )
+        .select(F.round("g", rerank.SCORE_DECIMALS).alias("g"))
+        .collect()
     ]
     by_qid: dict[int, list] = {}
     for (qid, d, s), g in zip(
@@ -167,16 +166,14 @@ def _geodesic_local_finish(
         final.extend(
             (qid, d, s, g, i + 1) for i, (g, d, s) in enumerate(cands)
         )
-    from geometric_aware_retrieval_v2_spark.operators.index import _values_local_df
-
-    return _values_local_df(
+    q_, d_, s_, g_, r_ = zip(*final)
+    return localrel.local_df(
         spark,
-        ",".join(
-            f"({q}L,{d}L,CAST('{s!r}' AS DOUBLE),CAST('{g!r}' AS DOUBLE),{r}L)"
-            for q, d, s, g, r in final
-        ),
-        "col1 AS qid, col2 AS doc_id, col3 AS bm25, col4 AS geo_dist, "
-        "col5 AS `rank`",
+        qid=np.array(q_, dtype=np.int64),
+        doc_id=np.array(d_, dtype=np.int64),
+        bm25=np.array(s_, dtype=np.float64),
+        geo_dist=np.array(g_, dtype=np.float64),
+        rank=np.array(r_, dtype=np.int64),
     )
 
 

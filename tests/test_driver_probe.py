@@ -43,6 +43,18 @@ _HAND_CASES = [
 ]
 
 
+# query texts a local_queries_df frame must carry to the JVM unchanged
+_FRAME_TEXTS = [
+    "it's beta",
+    'say "alpha"',
+    "back\\slash beta",
+    "line\nbreak\r\nalpha",
+    "ütf Δ中 \U0001F600 beta",
+    "",
+    None,
+]
+
+
 def _rand_strings(n: int, seed: int) -> list[str]:
     rng = random.Random(seed)
     out = []
@@ -102,6 +114,8 @@ def test_interactive_trip_python_probe_matches_catalyst(spark, tmp_path):
 
     batch = [(7, "beta Gamma_delta parseHTTPServer nosuchterm"),
              (8, None), (9, ""), (10, "alpha alpha beta")]
+    batch += [(20 + i, t) for i, t in enumerate(_FRAME_TEXTS)]
+    batch += [(7, "alpha"), (20, "parseHTTPServer")]  # duplicate qids
     q = local_queries_df(spark, batch)
     trip = ix._interactive_trip(h, q)
     assert trip is not ix._BULK
@@ -124,3 +138,25 @@ def test_interactive_trip_python_probe_matches_catalyst(spark, tmp_path):
     want = [(q_, t) for q_, t in ref_pairs if dfs.get(t, 0) > 0]
     assert [(t[0], t[1]) for t in trip] == want
     assert all(t[2] == dfs[t[1]] for t in trip)
+
+
+def test_local_queries_df_contract(spark):
+    """local_queries_df round-trips every row exactly — quotes, backslash,
+    newlines, non-ASCII, empty and null text, a null qid, duplicate qids —
+    as a LocalTableScan whose collect() schedules no Spark job."""
+    rows = [(i, t) for i, t in enumerate(_FRAME_TEXTS)] + [
+        (None, "null qid"),
+        (3, "duplicate qid"),
+    ]
+    q = local_queries_df(spark, rows)
+    assert q.schema.simpleString() == "struct<qid:bigint,text:string>"
+    assert "LocalTableScan" in q._jdf.queryExecution().executedPlan().toString()
+    sc = spark.sparkContext
+    sc.setJobGroup("local_queries", "local_queries")
+    try:
+        got = [(r.qid, r.text) for r in q.collect()]
+        jobs = sc.statusTracker().getJobIdsForGroup("local_queries") or []
+    finally:
+        sc.setJobGroup(None, None)
+    assert got == rows and jobs == []
+    assert local_queries_df(spark, []).collect() == []

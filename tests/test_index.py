@@ -505,3 +505,144 @@ def test_bounded_cache_fill_refetches_evicted_keys():
 def test_bm25_topk_indexed_rejects_nonpositive_k(spark):
     with pytest.raises(ValueError, match="k must be >= 1"):
         bm25_topk_indexed(spark, "/nonexistent", queries_df(spark), k=0)
+
+
+def _merge_reference(rows, k, docmap):
+    """The coordinator merge as plain Python: per qid, keep every partial
+    scoring >= the k-th best, then rank by (score desc, doc_id asc)."""
+    by_qid: dict[int, list] = {}
+    for q, o, s in rows:
+        by_qid.setdefault(q, []).append((s, o))
+    out = []
+    for q in sorted(by_qid):
+        scores = sorted((s for s, _ in by_qid[q]), reverse=True)
+        kth = scores[min(k, len(scores)) - 1]
+        kept = sorted(
+            ((s, docmap[o]) for s, o in by_qid[q] if s >= kth),
+            key=lambda t: (-t[0], t[1]),
+        )[:k]
+        out.extend((q, d, s, i + 1) for i, (s, d) in enumerate(kept))
+    return out
+
+
+def _partials_table(rows):
+    import pyarrow as pa
+
+    return pa.table({
+        "qid": pa.array([r[0] for r in rows], pa.int64()),
+        "ord": pa.array([r[1] for r in rows], pa.int64()),
+        "score": pa.array([r[2] for r in rows], pa.float64()),
+    })
+
+
+def _numpy_merge(rows, k, docmap):
+    import numpy as np
+
+    from geometric_aware_retrieval_v2_spark.operators.index import _merge_partials
+
+    resolved = []
+
+    def resolve(ords):
+        assert ords.dtype == np.int64 and list(ords) == sorted(set(ords.tolist()))
+        resolved.append(ords.tolist())
+        return [docmap[o] for o in ords.tolist()]
+
+    q, d, s, r = _merge_partials(_partials_table(rows), k, resolve)
+    assert [a.dtype.name for a in (q, d, s, r)] == ["int64", "int64", "float64", "int64"]
+    return list(zip(q.tolist(), d.tolist(), s.tolist(), r.tolist())), resolved
+
+
+def test_merge_partials_matches_python_reference():
+    """The NumPy coordinator merge against the plain-Python one, on hand-built
+    partial tables (rows of several shards interleaved, as slices deliver
+    them): a k-boundary tie class spanning shards, a qid with fewer than k
+    partials, equal scores whose ord order reverses their doc_id order."""
+    docmap = {o: 1000 - 7 * o for o in range(60)}  # ord asc == doc_id desc
+    rows = [
+        # qid 1, k=3: 5.0 then a 2.5 tie class of 4 over two shards
+        (1, 3, 2.5), (1, 1, 5.0), (1, 40, 2.5), (1, 2, 2.5), (1, 41, 2.5),
+        (1, 4, 1.0), (1, 42, 0.5),
+        # qid 2: fewer than k partials
+        (2, 7, 0.25), (2, 50, 0.75),
+        # qid 0: every score equal, ords reversed against doc_ids
+        (0, 10, 1.5), (0, 11, 1.5), (0, 12, 1.5), (0, 13, 1.5),
+    ]
+    got, resolved = _numpy_merge(rows, 3, docmap)
+    assert got == _merge_reference(rows, 3, docmap)
+    assert [(q, d) for q, d, _, _ in got if q == 1] == [
+        (1, docmap[1]), (1, docmap[41]), (1, docmap[40])
+    ]
+    assert [d for q, d, _, _ in got if q == 0] == [docmap[13], docmap[12], docmap[11]]
+    # only the boundary tie classes are resolved: ords 4 and 42 score below
+    # qid 1's k-th score
+    assert resolved == [[1, 2, 3, 7, 10, 11, 12, 13, 40, 41, 50]]
+
+    assert _numpy_merge([], 3, docmap) == ([], [])  # nothing to resolve
+
+
+@pytest.mark.parametrize("seed", range(6))
+def test_merge_partials_random_ties(seed):
+    """Randomized: few distinct scores, so tie classes straddle k."""
+    import random
+
+    rng = random.Random(seed)
+    ords = rng.sample(range(10_000), 400)
+    docmap = {o: rng.randrange(10**9) for o in ords}
+    rows = [
+        (rng.randrange(8), o, rng.choice([0.5, 1.25, 1.25, 2.0, 3.75]))
+        for o in ords
+    ]
+    for k in (1, 5, 20, 100):
+        assert _numpy_merge(rows, k, docmap)[0] == _merge_reference(rows, k, docmap)
+
+
+@pytest.mark.parametrize(
+    "rows",
+    [[(1, "hash join"), (None, "table scan")], [(None, "hash join")]],
+    ids=["mixed", "alone"],
+)
+def test_null_qid_rejected(spark, index_dir, rows):
+    """A null qid in an interactive batch is a caller error: it must raise a
+    ValueError naming it, not a TypeError from sorting the probe pairs or a
+    failure inside the scoring task."""
+    from geometric_aware_retrieval_v2_spark.localrel import local_queries_df
+
+    with pytest.raises(ValueError, match="null qid"):
+        bm25_topk_indexed(spark, index_dir, local_queries_df(spark, rows), k=5)
+
+
+def test_interactive_result_over_4096_rows(spark, tmp_path):
+    """A 256-qid x k=20 interactive batch returns 5,120 rows — past the
+    4,096-row limit the SQL-text result relation had — and still returns
+    exactly the tf-frame rows as a LocalRelation whose collect() schedules
+    no Spark job."""
+    import random
+
+    from geometric_aware_retrieval_v2_spark.localrel import local_queries_df
+
+    rng = random.Random(3)
+    vocab = "ant bee cat dog eel fox gnu hen ibis jay".split()
+    rows = [
+        (i, " ".join(w for w in vocab for _ in range(rng.choice([0, 0, 1, 2, 3]))))
+        for i in range(80)
+    ]
+    assert all(sum(w in t.split() for _, t in rows) >= 20 for w in vocab)
+    docs = spark.createDataFrame(rows, schema="doc_id long, content string")
+    d = str(tmp_path / "wide")
+    build_index(spark, docs, d, n_partitions=2, n_shards=2, block_size=16)
+    queries = local_queries_df(
+        spark, [(q, " ".join(rng.sample(vocab, rng.randint(1, 3)))) for q in range(256)]
+    )
+    out = bm25_topk_indexed(spark, d, queries, k=20)
+    sc = spark.sparkContext
+    sc.setJobGroup("wide_result", "wide_result")
+    try:
+        got = _collect_topk(out)
+        jobs = sc.statusTracker().getJobIdsForGroup("wide_result") or []
+    finally:
+        sc.setJobGroup(None, None)
+    assert len(got) == 256 * 20 and jobs == []
+    want = _collect_topk(
+        bm25.bm25_topk(tokenize_terms(docs), doc_stats(docs), queries, k=20)
+    )
+    assert got == want
