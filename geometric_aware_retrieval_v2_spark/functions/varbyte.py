@@ -1,7 +1,9 @@
 """Delta + varbyte posting compression (classic vbyte: little-endian 7-bit
 groups, high bit set on the terminating byte), fully vectorized in NumPy —
-these run inside grouped pandas UDFs during posting-block pack/unpack, so
-there must be no per-value Python loop.
+these run inside Arrow UDFs over whole partitions (the pack kernel encodes
+every block of a task in one call, and postings.decode_blocks decodes every
+block row of a batch or query partition in one call), so there must be no
+per-value Python loop.
 
 Public-algorithm citations: vbyte per Zobel & Moffat, "Inverted files for
 text search engines" (ACM CSUR 2006); block layout per Ding & Suel,

@@ -20,8 +20,9 @@ granularity P scales with input size while each job stays shuffle-light.
 Query topology: postings are document-sharded (see operators/postings.py), so
 scoring is a per-(qid, shard) partial top-k followed by a per-qid merge —
 partials are exact because a document's every query term lives in its one
-shard. One mapInArrow kernel (_partials_kernel) scores every (qid, shard)
-group of a partition in batched NumPy, and two routes feed it:
+shard. One mapInArrow kernel (_partials_kernel) decodes every block row of
+its partition once and scores every (qid, shard) group of the partition in
+batched NumPy, and two routes feed it:
   * interactive (<= _DRIVER_FINISH_MAX_QIDS qids): a term-pruned scan of the
     shard-clustered postings, qid/idf expanded from the task closure, no
     exchange; the partials come back as one Arrow table and are merged in
@@ -31,7 +32,7 @@ group of a partition in batched NumPy, and two routes feed it:
     the partials are resolved by a docmap join and ranked by a window.
 
 Block-max WAND (Ding & Suel, SIGIR 2011), adapted to a vectorized two-pass
-form that is *provably exact* (see _score_blocks): phase 1 decodes the few
+form that is *provably exact* (see _score_blocks): phase 1 scores the few
 highest-upper-bound blocks to establish a score floor theta (a lower bound on
 the true k-th best score); phase 2 skips every block whose own upper bound
 plus the overlapping upper bounds of the other query terms cannot reach
@@ -68,7 +69,8 @@ from geometric_aware_retrieval_v2_spark.operators.bm25 import (
 )
 from geometric_aware_retrieval_v2_spark.operators.ordinals import assign_ordinals
 from geometric_aware_retrieval_v2_spark.operators.postings import (
-    decode_block,
+    _ranges_to_indices,
+    decode_blocks,
     merge_segments,
     pack_postings,
     pack_width,
@@ -526,7 +528,9 @@ def _score_blocks(
     last: np.ndarray,
     terms: np.ndarray,
     ns: np.ndarray,
-    get_bytes,
+    starts: np.ndarray,
+    docs: np.ndarray,
+    w: np.ndarray,
     k: int,
     k1: float,
     b: float,
@@ -534,27 +538,26 @@ def _score_blocks(
     use_wand: bool,
 ) -> tuple[np.ndarray, np.ndarray, int, int]:
     """Score one (qid, shard) group of block rows given as plain NumPy
-    columns plus a ``get_bytes(i) -> bytes`` accessor. -> (doc_ids, scores,
-    n_blocks, n_decoded). Batched NumPy only — the body of _partials_kernel,
-    which both query routes run, so they are score-identical by
-    construction."""
+    columns. Its postings are already decoded: block i's doc_ids and
+    per-posting BM25 tf weights tf (k1 + 1) / (tf + k1 (1 - b + b dl /
+    avgdl)) are ``docs`` and ``w`` over ``[starts[i], starts[i] + ns[i])``,
+    so a block "decoded" here is a slice, and a posting scores idf x w.
+    -> (doc_ids, scores, n_blocks, n_decoded), where n_decoded counts the
+    blocks scored (the WAND probe plus the survivors). Batched NumPy only
+    — the body of _partials_kernel, which both query routes run, so they
+    are score-identical by construction."""
     nb = len(terms)
     ub = idf * (mtf * (k1 + 1.0) / (mtf + k1 * (1.0 - b + b * mdl / avgdl)))
 
-    cache: dict[int, tuple[np.ndarray, np.ndarray]] = {}
-
-    def decode(i: int) -> tuple[np.ndarray, np.ndarray]:
-        if i not in cache:
-            d, t, l = decode_block(get_bytes(i), int(ns[i]))
-            tf = t.astype(np.float64)
-            dl = l.astype(np.float64)
-            s = idf[i] * (tf * (k1 + 1.0) / (tf + k1 * (1.0 - b + b * dl / avgdl)))
-            cache[i] = (d, s)
-        return cache[i]
+    def gather(blocks: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+        # postings of `blocks` (ascending) in block order: per doc, the
+        # add.at below then sums term contributions in term_id order
+        idx = _ranges_to_indices(starts[blocks], ns[blocks])
+        return docs[idx], np.repeat(idf[blocks], ns[blocks]) * w[idx]
 
     keep = np.ones(nb, dtype=bool)
     if use_wand and nb > 2:
-        # phase 1: decode a few highest-ub blocks -> theta (lower bound on
+        # phase 1: score a few highest-ub blocks -> theta (lower bound on
         # the true kth-best score: partial sums are <= true scores). The
         # probe set is the global top few PLUS the single highest-ub block
         # of EVERY query term: multi-term queries otherwise establish theta
@@ -564,8 +567,7 @@ def _score_blocks(
         probe = order[: max(2, min(nb, 2 * max(k // 8, 1) + 2))]
         _, first_idx = np.unique(terms[order], return_index=True)
         probe = np.unique(np.concatenate([probe, order[first_idx]]))
-        pd_docs = np.concatenate([decode(int(i))[0] for i in probe])
-        pd_scores = np.concatenate([decode(int(i))[1] for i in probe])
+        pd_docs, pd_scores = gather(probe)
         uniq, inv = np.unique(pd_docs, return_inverse=True)
         acc = np.zeros(len(uniq))
         np.add.at(acc, inv, pd_scores)
@@ -573,14 +575,10 @@ def _score_blocks(
         if np.isfinite(theta):
             # phase 2: vectorized per-block survival test (see _wand_survival)
             keep = _wand_survival(terms, first, last, ub, theta)
-            keep[probe] = True  # already decoded; keep their contributions
+            keep[probe] = True  # already scored; keep their contributions
 
-    dec = [decode(int(i)) for i in np.nonzero(keep)[0]]
-    if not dec:
-        return np.empty(0, np.int64), np.empty(0, np.float64), nb, len(cache)
-    docs = np.concatenate([d for d, _ in dec])
-    scores = np.concatenate([s for _, s in dec])
-    uniq, inv = np.unique(docs, return_inverse=True)
+    all_docs, scores = gather(np.nonzero(keep)[0])
+    uniq, inv = np.unique(all_docs, return_inverse=True)
     acc = np.zeros(len(uniq))
     np.add.at(acc, inv, scores)
     # partial top-k within the shard on the SAME key as the final merge:
@@ -588,22 +586,25 @@ def _score_blocks(
     # here by raw score could out-rank a kept one after rounding upstream
     acc_r = np.floor(acc * 10.0**SCORE_DECIMALS + 0.5) / 10.0**SCORE_DECIMALS
     sel = np.lexsort((uniq, -acc_r))[:k]
-    return uniq[sel], acc_r[sel], nb, len(cache)
+    return uniq[sel], acc_r[sel], nb, int(keep.sum())
 
 
 def _shard_partition_salt(
     spark: SparkSession, n_shards: int, n_parts: int, max_salt: int = 4096
 ) -> int:
     """Find a salt c so that ``repartition(n_parts, (shard + c) AS INT)``
-    spreads the shard values over the most distinct partitions (perfect
-    spread when one exists in budget). HashPartitioning applies the same
-    Murmur3 ``hash()`` SQL exposes, so the bucket of every (c, shard) pair
-    is evaluated driver-side in ONE LocalRelation fold — no job. For large
-    n_shards a perfect spread is combinatorially out of reach and collisions
-    average out anyway, so the search caps at 512 candidate salts."""
+    balances the shard values over the partitions: the first c whose
+    fullest partition holds the ideal ceil(n_shards / n_parts) shards (with
+    n_parts == n_shards: every shard in its own partition), else the c with
+    the smallest fullest partition in budget. HashPartitioning applies the
+    same Murmur3 ``hash()`` SQL exposes, so the bucket of every (c, shard)
+    pair is evaluated driver-side in ONE LocalRelation fold — no job. For
+    large n_shards an ideal spread is combinatorially out of reach and
+    collisions average out anyway, so the search caps at 512 candidate
+    salts."""
     budget = max_salt if n_shards <= 16 else 512
-    target = min(n_shards, n_parts)
-    best_c, best_n = 0, -1
+    ideal = -(-n_shards // n_parts)
+    best_c, best_max = 0, n_shards + 1
     for chunk in range(0, budget, 256):
         cs = range(chunk, min(chunk + 256, budget))
         rows = spark.sql(
@@ -611,14 +612,15 @@ def _shard_partition_salt(
             f"{int(n_parts)}) AS b FROM VALUES "
             + ",".join(f"({c},{s})" for c in cs for s in range(n_shards))
         ).collect()
-        buckets: dict[int, set] = {}
+        loads: dict[int, dict[int, int]] = {}
         for r in rows:
-            buckets.setdefault(r.c, set()).add(r.b)
+            per_b = loads.setdefault(r.c, {})
+            per_b[r.b] = per_b.get(r.b, 0) + 1
         for c in cs:
-            n = len(buckets.get(c, ()))
-            if n > best_n:
-                best_c, best_n = c, n
-            if n >= target:
+            m = max(loads[c].values())
+            if m < best_max:
+                best_c, best_max = c, m
+            if m <= ideal:
                 return c
     return best_c
 
@@ -652,18 +654,22 @@ class IndexHandle:
     def shard_clustered(self) -> DataFrame:
         """Postings re-clustered so every partition holds COMPLETE shards —
         the layout the no-shuffle interactive kernel needs (a partial top-k
-        per (qid, shard) is exact only over all of a shard's blocks). The
-        partition key is salted so Murmur3 spreads the n_shards values over
-        distinct partitions (plain ``repartition(n, "shard")`` collides a
-        handful of values into shared buckets — a straggler doing two
-        shards' work while another task idles). In-partition (shard,
-        term_id) sort makes the cached batch min/max stats prune the
-        per-query term_id IN (...) filter."""
+        per (qid, shard) is exact only over all of a shard's blocks) — in
+        min(n_shards, defaultParallelism) partitions, so a query's scoring
+        job is one task wave: with fewer cores than shards, each task
+        scores several whole shards rather than a second wave of tasks
+        waiting for free cores. The partition key is salted so Murmur3
+        balances the shard values (plain ``repartition(n, "shard")``
+        collides a handful of values into shared buckets — a straggler
+        doing extra shards' work while another task idles). In-partition
+        (shard, term_id) sort makes the cached batch min/max stats prune
+        the per-query term_id IN (...) filter."""
         if self._shard_view is None:
             n_shards = self.meta.n_shards
-            salt = _shard_partition_salt(self.spark, n_shards, n_shards)
+            n_parts = min(n_shards, self.spark.sparkContext.defaultParallelism)
+            salt = _shard_partition_salt(self.spark, n_shards, n_parts)
             self._shard_view = self.postings.repartition(
-                n_shards, (F.col("shard") + F.lit(salt)).cast("int")
+                n_parts, (F.col("shard") + F.lit(salt)).cast("int")
             ).sortWithinPartitions("shard", "term_id", "first_doc")
         return self._shard_view
 
@@ -691,10 +697,11 @@ _DRIVER_FINISH_MAX_QIDS = 256
 
 # postings budget of one interactive qid slice, measured as sum(df) over the
 # slice's scoreable (qid, term) pairs — an upper bound on postings touched,
-# free from the probe's df cache. One slice's parallelism is bounded by
-# n_shards (one task per shard scores its qids serially), so a batch over
-# the budget splits into min(ceil(sum(df) / budget), n_qids) slices run as
-# concurrent jobs. Measured same-session at 8 shards/local[32], 500k docs,
+# free from the probe's df cache. One slice's parallelism is bounded by the
+# shard view's min(n_shards, defaultParallelism) partitions (one task per
+# partition scores its shards' qids serially), so a batch over the budget
+# splits into min(ceil(sum(df) / budget), n_qids) slices run as concurrent
+# jobs. Measured same-session at 8 shards/local[32], 500k docs,
 # 20 queries, sum(df) 17.7M: one job 1.11 s, 3 concurrent slices 0.63 s.
 # A too-low budget only forfeits latency, never correctness (every slice
 # runs the same kernel over whole qids).
@@ -1002,18 +1009,21 @@ def _partials_kernel(
 ):
     """The one per-(qid, shard) scoring kernel, as a ``mapInArrow`` body.
 
-    The partition's block rows are concatenated once; ``expand(tab, terms)
-    -> (rows, qids, idfs)`` lists every (block row, qid) pair to score and
-    its idf — the only step that differs between the two query routes.
-    One lexsort by (shard, qid, term_id, first_doc) then lays every
-    (qid, shard) group out contiguously, in the same block order on both
-    routes, and ``_score_blocks`` scores each group with the same
-    ``keep_n`` cut. A partial is exact as long as the partition holds all
-    of a (qid, shard) group's blocks, which both routes guarantee.
+    The partition's block rows are concatenated once and every row's
+    payload is decoded in ONE varbyte pass over the binary column
+    (postings.decode_blocks), along with each posting's BM25 tf weight, so
+    a block a shared term gives several qids is decoded once.
+    ``expand(tab, terms) -> (rows, qids, idfs)`` lists every (block row,
+    qid) pair to score and its idf — the only step that differs between
+    the two query routes. One lexsort by (shard, qid, term_id, first_doc)
+    then lays every (qid, shard) group out contiguously, in the same block
+    order on both routes, and ``_score_blocks`` scores each group from
+    slices of the decoded postings with the same ``keep_n`` cut. A partial
+    is exact as long as the partition holds all of a (qid, shard) group's
+    blocks, which both routes guarantee.
 
     Emits (qid, ord, score) partial rows, or with ``stats`` one
     (qid, shard, n_blocks, n_decoded) row per group."""
-    import pyarrow as pa
 
     def kernel(batches):
         tabs = [pa.Table.from_batches([rb]) for rb in batches if rb.num_rows]
@@ -1027,7 +1037,9 @@ def _partials_kernel(
         ns = tab.column("n").to_numpy().astype(np.int64)
         mtf = tab.column("max_tf").to_numpy().astype(np.float64)
         mdl = tab.column("min_dl").to_numpy().astype(np.float64)
-        byte_arr = tab.column("bytes").combine_chunks()
+        docs, tf, dl, row_start = decode_blocks(tab.column("bytes"), ns)
+        tf = tf.astype(np.float64)
+        w = tf * (k1 + 1.0) / (tf + k1 * (1.0 - b + b * dl.astype(np.float64) / avgdl))
         rows, qids, idfs = expand(tab, terms)
         order = np.lexsort((first[rows], terms[rows], qids, shards[rows]))
         rows, qids, idfs = rows[order], qids[order], idfs[order]
@@ -1042,7 +1054,7 @@ def _partials_kernel(
             ords, scores, nb, ndec = _score_blocks(
                 idfs[g0:g1],
                 mtf[rq], mdl[rq], first[rq], last[rq], terms[rq], ns[rq],
-                lambda i, rq=rq: byte_arr[int(rq[i])].as_py(),
+                row_start[rq], docs, w,
                 k=keep_n, k1=k1, b=b, avgdl=avgdl, use_wand=use_wand,
             )
             if stats:
@@ -1065,6 +1077,31 @@ def _partials_kernel(
     return kernel
 
 
+def _expand_by_term(trip: list[tuple]):
+    """The interactive route's ``expand`` for _partials_kernel: each block
+    row of a query term pairs with every (qid, idf) of ``trip`` that has
+    the term. The scan is filtered to those terms, so every row maps."""
+    by_term: dict[int, list[tuple[int, float]]] = {}
+    for q, t, _, idf_v in trip:
+        by_term.setdefault(t, []).append((q, idf_v))
+
+    def expand(tab, terms):
+        order = np.argsort(terms, kind="stable")
+        uniq, start, cnt = np.unique(
+            terms[order], return_index=True, return_counts=True
+        )
+        rows, qids, idfs = [], [], []
+        for t, s, c in zip(uniq, start, cnt):
+            rt = order[s : s + c]
+            for q, idf_v in by_term[int(t)]:
+                rows.append(rt)
+                qids.append(np.full(c, q, dtype=np.int64))
+                idfs.append(np.full(c, idf_v))
+        return np.concatenate(rows), np.concatenate(qids), np.concatenate(idfs)
+
+    return expand
+
+
 def _interactive_partials(
     handle: IndexHandle,
     trip: list[tuple],
@@ -1082,31 +1119,12 @@ def _interactive_partials(
     task closure (a few hundred bytes: no broadcast, no join) and expands
     each block row into the qids that need it. One Spark stage per batch.
     """
-    by_term: dict[int, list[tuple[int, float]]] = {}
-    for q, t, _, idf_v in trip:
-        by_term.setdefault(t, []).append((q, idf_v))
-
-    def expand(tab, terms):
-        # the scan is filtered to by_term's keys, so every row maps
-        order = np.argsort(terms, kind="stable")
-        uniq, start, cnt = np.unique(
-            terms[order], return_index=True, return_counts=True
-        )
-        rows, qids, idfs = [], [], []
-        for t, s, c in zip(uniq, start, cnt):
-            rt = order[s : s + c]
-            for q, idf_v in by_term[int(t)]:
-                rows.append(rt)
-                qids.append(np.full(c, q, dtype=np.int64))
-                idfs.append(np.full(c, idf_v))
-        return np.concatenate(rows), np.concatenate(qids), np.concatenate(idfs)
-
     kernel = _partials_kernel(
-        expand, keep_n, k1, b, handle.meta.avgdl, use_wand
+        _expand_by_term(trip), keep_n, k1, b, handle.meta.avgdl, use_wand
     )
     return (
         handle.shard_clustered()
-        .filter(in_expr("term_id", sorted(by_term)))
+        .filter(in_expr("term_id", sorted({t for _, t, _, _ in trip})))
         .select(
             "term_id", "shard", "first_doc", "last_doc", "n",
             "max_tf", "min_dl", "bytes",
@@ -1128,7 +1146,8 @@ def _interactive_partial_rows(
     n_qids) volume-balanced qid slices (greedy LPT over per-qid sum(df);
     the budget is _FAST_PARTIALS_MAX_POSTINGS). One slice runs inline;
     several run as independent single-stage jobs, CONCURRENTLY, so batch
-    parallelism is n_slices x n_shards with no exchange.
+    parallelism is n_slices x the shard view's partitions
+    (IndexHandle.shard_clustered) with no exchange.
 
     Exactness: slices partition whole qids, so every (qid, shard) partial
     is computed by exactly one slice from exactly the rows one job over
@@ -1283,8 +1302,9 @@ def wand_block_stats(
     handle = IndexHandle(spark, index) if isinstance(index, str) else index
     trip = _interactive_trip(handle, queries)
     if not trip:
-        return spark.createDataFrame(
-            [], schema="qid long, shard int, n_blocks long, n_decoded long"
+        e = pa.array([], pa.int64())
+        return localrel.local_df(
+            spark, qid=e, shard=pa.array([], pa.int32()), n_blocks=e, n_decoded=e
         )
     cand = (
         _bulk_candidate_blocks(handle, queries)

@@ -35,11 +35,11 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from geometric_aware_retrieval_v2_spark.functions.varbyte import (
-    decode_postings_block,
     varbyte_decode,
     varbyte_encode,
 )
@@ -89,6 +89,55 @@ def decode_block(buf: bytes, n: int) -> tuple[np.ndarray, np.ndarray, np.ndarray
     return (u ^ _SIGN).astype(np.int64), vals[n : 2 * n], vals[2 * n :]
 
 
+def _payload_bytes(arr) -> np.ndarray:
+    """The contiguous data bytes of every row of a ``binary`` or
+    ``large_binary`` array (sliced or not), as a zero-copy uint8 view."""
+    if len(arr) == 0:
+        return np.empty(0, dtype=np.uint8)
+    off_type = np.int64 if pa.types.is_large_binary(arr.type) else np.int32
+    _, off_buf, data_buf = arr.buffers()
+    offs = np.frombuffer(off_buf, dtype=off_type, count=arr.offset + len(arr) + 1)
+    lo, hi = int(offs[arr.offset]), int(offs[-1])
+    if hi == lo:
+        return np.empty(0, dtype=np.uint8)
+    return np.frombuffer(data_buf, dtype=np.uint8, count=hi - lo, offset=lo)
+
+
+def decode_blocks(blocks, ns) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+    """Decode many block payloads in ONE varbyte pass -> (doc_ids int64,
+    tfs uint64, dls uint64, row_start int64).
+
+    ``blocks`` is an Arrow ``binary`` / ``large_binary`` array or chunked
+    array of block payloads and ``ns`` their posting counts. Block i's
+    postings are ``[row_start[i], row_start[i + 1])`` of the outputs, equal
+    to ``decode_block(blocks[i], ns[i])``. Every payload ends on a value
+    boundary, so the rows' bytes concatenated decode to their value
+    streams concatenated: one vectorized pass, then a gather splits each
+    block's 3n values into its gap, tf and dl runs, and a segmented cumsum
+    restarts each block's delta chain (uint64 arithmetic wraps mod 2^64,
+    so subtracting the running sum at the block start is exact)."""
+    chunks = blocks.chunks if isinstance(blocks, pa.ChunkedArray) else [blocks]
+    ns = np.asarray(ns, dtype=np.int64)
+    if sum(len(c) for c in chunks) != len(ns):
+        raise ValueError(f"{len(ns)} posting counts for {len(blocks)} blocks")
+    parts = [_payload_bytes(c) for c in chunks] or [np.empty(0, np.uint8)]
+    vals = varbyte_decode(parts[0] if len(parts) == 1 else np.concatenate(parts))
+    row_start = np.concatenate(([0], np.cumsum(ns))).astype(np.int64)
+    total = int(row_start[-1])
+    if len(vals) != 3 * total:
+        raise ValueError(
+            f"block payloads hold {len(vals)} values, expected 3 x {total}"
+        )
+    row = np.repeat(np.arange(len(ns)), ns)
+    n_of = ns[row]
+    at = 2 * row_start[:-1][row] + np.arange(total)  # 3 * start + within
+    gaps = vals[at]
+    cs = np.cumsum(gaps, dtype=np.uint64)
+    base = np.concatenate(([np.uint64(0)], cs))[row_start[:-1]]
+    u = cs - np.repeat(base, ns)
+    return (u ^ _SIGN).astype(np.int64), vals[at + n_of], vals[at + 2 * n_of], row_start
+
+
 def with_shard(tf_dl: DataFrame, n_shards: int) -> DataFrame:
     """Attach the document-pure salt column."""
     return tf_dl.withColumn(
@@ -124,8 +173,6 @@ def _pack_arrays(
     per-block Python objects (the previous pandas kernel built a Python
     bytes object per block: at 4M-row pack tasks that loop plus the
     pandas<->Arrow round trip dominated the whole build's profile)."""
-    import pyarrow as pa
-
     from geometric_aware_retrieval_v2_spark.functions.varbyte import (
         varbyte_encode_with_lengths,
     )
@@ -298,33 +345,29 @@ def pack_postings(
 def unpack_postings(postings: DataFrame) -> DataFrame:
     """Inverse of pack: block rows -> (term_id, shard, doc_id, tf, dl).
 
-    Arrow-batched (``mapInPandas``), used by segment merge and by tests for
-    the lossless round-trip invariant.
+    Arrow-batched (``mapInArrow``, one ``decode_blocks`` pass per batch),
+    used by segment merge and by tests for the lossless round-trip
+    invariant.
     """
 
-    def unpack(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
+    def unpack(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for rb in batches:
+            if not rb.num_rows:
                 continue
-            ns = pdf["n"].to_numpy(dtype=np.int64)
-            ds, ts, ls = [], [], []
-            for n, buf in zip(ns, pdf["bytes"]):
-                d, t, l = decode_block(buf, int(n))
-                ds.append(d)
-                ts.append(t)
-                ls.append(l)
-            # ONE output frame per Arrow batch (not per block)
-            yield pd.DataFrame(
-                {
-                    "term_id": np.repeat(pdf["term_id"].to_numpy(), ns),
-                    "shard": np.repeat(pdf["shard"].to_numpy(), ns).astype(np.int32),
-                    "doc_id": np.concatenate(ds),
-                    "tf": np.concatenate(ts).astype(np.int64),
-                    "dl": np.concatenate(ls).astype(np.int64),
-                }
+            ns = rb.column("n").to_numpy().astype(np.int64)
+            d, t, l, _ = decode_blocks(rb.column("bytes"), ns)
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(np.repeat(rb.column("term_id").to_numpy(), ns)),
+                    pa.array(np.repeat(rb.column("shard").to_numpy(), ns).astype(np.int32)),
+                    pa.array(d),
+                    pa.array(t.astype(np.int64)),
+                    pa.array(l.astype(np.int64)),
+                ],
+                names=["term_id", "shard", "doc_id", "tf", "dl"],
             )
 
-    return postings.select("term_id", "shard", "n", "bytes").mapInPandas(
+    return postings.select("term_id", "shard", "n", "bytes").mapInArrow(
         unpack, schema="term_id long, shard int, doc_id long, tf long, dl long"
     )
 

@@ -646,3 +646,229 @@ def test_interactive_result_over_4096_rows(spark, tmp_path):
         bm25.bm25_topk(tokenize_terms(docs), doc_stats(docs), queries, k=20)
     )
     assert got == want
+
+
+@pytest.mark.parametrize(
+    "shape", ["whole", "sliced", "chunked", "large_binary", "empty"]
+)
+def test_decode_blocks_matches_decode_block(index_dir, shape):
+    """The one-pass decoder returns, block row by block row, exactly what
+    ``decode_block`` returns for that row alone — on a real index's
+    postings, for a sliced array (offset != 0), a column of several
+    chunks, ``large_binary`` (int64 offsets) and an empty input."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from geometric_aware_retrieval_v2_spark.operators.postings import (
+        decode_block,
+        decode_blocks,
+    )
+
+    tab = pq.read_table(f"{index_dir}/postings", columns=["n", "bytes"])
+    arr = tab.column("bytes").combine_chunks()
+    ns = tab.column("n").to_numpy().astype(np.int64)
+    m = len(arr)
+    assert m > 20
+    if shape == "sliced":
+        arr, ns = arr.slice(7, m - 20), ns[7 : m - 13]
+    elif shape == "chunked":
+        arr = pa.chunked_array([arr.slice(0, 5), arr.slice(5, m // 2), arr.slice(5 + m // 2)])
+    elif shape == "large_binary":
+        arr, ns = arr.cast(pa.large_binary()).slice(3), ns[3:]
+    elif shape == "empty":
+        arr, ns = arr.slice(0, 0), ns[:0]
+    docs, tfs, dls, row_start = decode_blocks(arr, ns)
+    assert (docs.dtype, tfs.dtype, dls.dtype) == (np.int64, np.uint64, np.uint64)
+    assert row_start.tolist() == [0] + np.cumsum(ns).tolist()
+    rows = arr.to_pylist()
+    assert len(rows) == len(ns)
+    for i, (buf, n) in enumerate(zip(rows, ns)):
+        d, t, l = decode_block(buf, int(n))
+        sl = slice(row_start[i], row_start[i + 1])
+        assert np.array_equal(docs[sl], d)
+        assert np.array_equal(tfs[sl], t) and np.array_equal(dls[sl], l)
+    if shape == "empty":
+        assert decode_blocks(pa.chunked_array([], pa.binary()), ns)[3].tolist() == [0]
+
+
+def _per_block_partials(post, trip, keep_n, k1, b, avgdl):
+    """Per-row reference for the interactive kernel: every (qid, shard)
+    group scored exhaustively, each block decoded on its own with
+    ``decode_block`` and each doc's term contributions summed in term_id
+    order, in the kernel's group order (shard, qid)."""
+    import math
+
+    import numpy as np
+
+    from geometric_aware_retrieval_v2_spark.operators.bm25 import SCORE_DECIMALS
+    from geometric_aware_retrieval_v2_spark.operators.postings import decode_block
+
+    blocks = sorted(
+        post.select(["term_id", "shard", "first_doc", "n", "bytes"]).to_pylist(),
+        key=lambda r: (r["shard"], r["term_id"], r["first_doc"]),
+    )
+    out = []
+    for shard in sorted({r["shard"] for r in blocks}):
+        for qid in sorted({q for q, _, _, _ in trip}):
+            idf = {t: i for q, t, _, i in trip if q == qid}
+            acc: dict[int, float] = {}
+            for r in blocks:
+                if r["shard"] != shard or r["term_id"] not in idf:
+                    continue
+                d, t, l = decode_block(r["bytes"], r["n"])
+                tf, dl = t.astype(np.float64), l.astype(np.float64)
+                s = idf[r["term_id"]] * (
+                    tf * (k1 + 1.0) / (tf + k1 * (1.0 - b + b * dl / avgdl))
+                )
+                for doc, v in zip(d.tolist(), s.tolist()):
+                    acc[doc] = acc.get(doc, 0.0) + v
+            scale = 10.0**SCORE_DECIMALS
+            ranked = sorted(
+                ((math.floor(v * scale + 0.5) / scale, doc) for doc, v in acc.items()),
+                key=lambda x: (-x[0], x[1]),
+            )[:keep_n]
+            out += [(qid, doc, v) for v, doc in ranked]
+    return out
+
+
+@pytest.mark.parametrize("method", ["wand", "exhaustive"])
+def test_partials_kernel_matches_per_block_reference(spark, index_dir, method):
+    """The kernel decodes each block row of its partition once and scores
+    every qid that shares the row's term from that one decode: its
+    (qid, ord, score) table equals, bit for bit, a reference that decodes
+    every (qid, block) on its own, whichever way the shards are split over
+    partitions. Its diagnostics keep their schema and count every block of
+    an exhaustive group as decoded."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from geometric_aware_retrieval_v2_spark.localrel import local_queries_df
+    from geometric_aware_retrieval_v2_spark.operators import index as ix
+
+    h = ix.IndexHandle(spark, index_dir)
+    batch = [(1, "hash join"), (2, "join table"), (3, "table scan hash"), (4, "the a"), (5, "a scan")]
+    trip = ix._interactive_trip(h, local_queries_df(spark, batch))
+    terms = [t for _, t, _, _ in trip]
+    assert len(set(terms)) < len(terms)  # some term serves several qids
+    post = pq.read_table(f"{index_dir}/postings")
+    post = post.filter(pc.is_in(post.column("term_id"), pa.array(sorted(set(terms)))))
+    keep_n, k1, b = 10 + 32, 1.2, 0.75
+    avgdl = h.meta.avgdl
+    want = _per_block_partials(post, trip, keep_n, k1, b, avgdl)
+    assert len(want) > 50
+    schema = pa.schema([("qid", pa.int64()), ("ord", pa.int64()), ("score", pa.float64())])
+    want_tab = pa.Table.from_pylist(
+        [dict(zip(schema.names, r)) for r in want], schema=schema
+    )
+    key = [("qid", "ascending"), ("ord", "ascending")]
+    shards = post.column("shard").to_numpy()
+    for n_parts in (1, 2, 4):
+        got = []
+        for p in range(n_parts):
+            part = post.filter(pa.array(shards % n_parts == p))
+            kernel = ix._partials_kernel(
+                ix._expand_by_term(trip), keep_n, k1, b, avgdl, method == "wand"
+            )
+            got += list(kernel(part.to_batches(max_chunksize=97)))
+        got_tab = pa.Table.from_batches(got, schema=schema)
+        assert got_tab.sort_by(key).equals(want_tab.sort_by(key)), n_parts
+    stats_kernel = ix._partials_kernel(
+        ix._expand_by_term(trip), keep_n, k1, b, avgdl, method == "wand", stats=True
+    )
+    stats = pa.Table.from_batches(list(stats_kernel(post.to_batches())))
+    assert stats.schema.names == ["qid", "shard", "n_blocks", "n_decoded"]
+    nb, nd = (stats.column(c).to_numpy() for c in ("n_blocks", "n_decoded"))
+    assert np.all(nd <= nb) and (method == "wand" or np.array_equal(nd, nb))
+
+
+@pytest.mark.parametrize(
+    "n_shards,n_parts", [(8, 4), (6, 4), (8, 8), (5, 3), (12, 5), (16, 4)]
+)
+def test_shard_partition_salt_balances_loads(spark, n_shards, n_parts):
+    """The chosen salt places the shard values on Spark's own hash
+    partitioner with the ideal ceil(n_shards / n_parts) fullest partition."""
+    from collections import Counter
+
+    from geometric_aware_retrieval_v2_spark.operators import index as ix
+
+    salt = ix._shard_partition_salt(spark, n_shards, n_parts)
+    placed = (
+        spark.range(n_shards)
+        .select(F.col("id").cast("int").alias("shard"))
+        .repartition(n_parts, (F.col("shard") + F.lit(salt)).cast("int"))
+        .select(F.spark_partition_id().alias("p"))
+        .collect()
+    )
+    assert max(Counter(r.p for r in placed).values()) == -(-n_shards // n_parts)
+
+
+@pytest.mark.parametrize("n_shards", [8, 6])
+def test_shard_view_fewer_cores_than_shards(spark, tmp_path, monkeypatch, n_shards):
+    """With defaultParallelism 4 below n_shards, the cached shard view has
+    4 balanced partitions that each hold whole shards, and both query
+    methods still return the tf-frame rows, for one query and for a batch
+    split over several concurrent qid slices."""
+    from collections import Counter
+
+    from geometric_aware_retrieval_v2_spark.localrel import local_queries_df
+    from geometric_aware_retrieval_v2_spark.operators import index as ix
+
+    docs = docs_from_documents(spark, SF_SMOKE)
+    d = str(tmp_path / "idx")
+    build_index(spark, docs, d, n_partitions=2, n_shards=n_shards, block_size=64)
+    monkeypatch.setattr(
+        type(spark.sparkContext), "defaultParallelism", property(lambda self: 4)
+    )
+    h = ix.IndexHandle(spark, d).cache()
+    try:
+        placed = (
+            h.shard_clustered()
+            .select("shard", F.spark_partition_id().alias("p"))
+            .distinct()
+            .collect()
+        )
+        assert sorted(Counter(r.shard for r in placed).items()) == [
+            (s, 1) for s in range(n_shards)
+        ]
+        loads = Counter(r.p for r in placed)
+        assert set(loads) <= set(range(4))
+        assert max(loads.values()) == -(-n_shards // 4)
+        tf, stats = tokenize_terms(docs), doc_stats(docs)
+        for rows in ([(1, "hash join")], _ROUTE_BATCH):
+            queries = local_queries_df(spark, rows)
+            if len(rows) > 1:
+                total_df = sum(t[2] for t in ix._interactive_trip(h, queries))
+                monkeypatch.setattr(ix, "_FAST_PARTIALS_MAX_POSTINGS", total_df // 3)
+            want = _collect_topk(bm25.bm25_topk(tf, stats, queries, k=10))
+            assert want
+            for method in ("wand", "exhaustive"):
+                got = _collect_topk(bm25_topk_indexed(spark, h, queries, k=10, method=method))
+                assert got == want, (rows, method)
+    finally:
+        h.postings.unpersist()
+        h.dictionary.unpersist()
+        h.docmap.unpersist()
+
+
+def test_all_oov_block_stats_schedule_no_job(spark, index_dir):
+    """All-OOV diagnostics are an empty LocalRelation with the stats
+    schema: collecting them schedules no Spark job."""
+    from geometric_aware_retrieval_v2_spark.localrel import local_queries_df
+
+    out = wand_block_stats(
+        spark, index_dir, local_queries_df(spark, [(7, "zzz_oov qqq_oov")])
+    )
+    assert out.schema.simpleString() == (
+        "struct<qid:bigint,shard:int,n_blocks:bigint,n_decoded:bigint>"
+    )
+    sc = spark.sparkContext
+    sc.setJobGroup("oov_stats", "oov_stats")
+    try:
+        rows = out.collect()
+        jobs = sc.statusTracker().getJobIdsForGroup("oov_stats") or []
+    finally:
+        sc.setJobGroup(None, None)
+    assert rows == [] and jobs == []
