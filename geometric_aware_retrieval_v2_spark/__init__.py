@@ -23,8 +23,23 @@ Subpackages:
   streaming/  Structured Streaming ingest (incremental windowed aggregation)
 """
 
-from geometric_aware_retrieval_v2_spark.experiment import quick_experiment
-from geometric_aware_retrieval_v2_spark.session import get_spark
-
 __all__ = ["get_spark", "quick_experiment"]
 __version__ = "0.1.0"
+
+_LAZY = {
+    "get_spark": "geometric_aware_retrieval_v2_spark.session",
+    "quick_experiment": "geometric_aware_retrieval_v2_spark.experiment",
+}
+
+
+def __getattr__(name: str):
+    # resolved on first use: every Python worker that unpickles an engine
+    # UDF imports this package, and experiment pulls in pandas through
+    # plans.trainer; a worker that only decodes postings should not pay that
+    if name in _LAZY:
+        import importlib
+
+        value = getattr(importlib.import_module(_LAZY[name]), name)
+        globals()[name] = value
+        return value
+    raise AttributeError(f"module {__name__!r} has no attribute {name!r}")

@@ -59,12 +59,11 @@ def varbyte_decode(buf: bytes) -> np.ndarray:
     ends = np.nonzero((b & 0x80) != 0)[0]
     starts = np.concatenate(([0], ends[:-1] + 1))
     lens = ends - starts + 1
-    val_idx = np.repeat(np.arange(len(ends)), lens)
     pos = np.arange(len(b), dtype=np.int64) - np.repeat(starts, lens)
     contrib = (b & np.uint8(0x7F)).astype(np.uint64) << (pos.astype(np.uint64) * np.uint64(7))
-    vals = np.zeros(len(ends), dtype=np.uint64)
-    np.add.at(vals, val_idx, contrib)
-    return vals
+    # a value's 7-bit groups are disjoint, so OR-reducing them is the sum;
+    # one contiguous reduceat per value, no scattered add.at
+    return np.bitwise_or.reduceat(contrib, starts)
 
 
 _SIGN_OFFSET = np.uint64(1) << np.uint64(63)

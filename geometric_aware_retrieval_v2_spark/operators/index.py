@@ -20,16 +20,23 @@ granularity P scales with input size while each job stays shuffle-light.
 Query topology: postings are document-sharded (see operators/postings.py), so
 scoring is a per-(qid, shard) partial top-k followed by a per-qid merge —
 partials are exact because a document's every query term lives in its one
-shard. One mapInArrow kernel (_partials_kernel) decodes every block row of
-its partition once and scores every (qid, shard) group of the partition in
-batched NumPy, and two routes feed it:
-  * interactive (<= _DRIVER_FINISH_MAX_QIDS qids): a term-pruned scan of the
+shard. One kernel (_partials_kernel) decodes every block row of its input
+once and scores every (qid, shard) group of it in batched NumPy, keeping
+each group's whole k-boundary tie class, and three routes feed it:
+  * driver (<= _DRIVER_FINISH_MAX_QIDS qids and sum(df) within
+    _DRIVER_SCORE_MAX_POSTINGS): a term-pruned JVM-only scan of the cached
+    shard view comes to the driver as Arrow and the kernel runs there, with
+    no Python-UDF job;
+  * Spark interactive (the same qid cap, over the postings budget): the
+    kernel as a mapInArrow over the term-pruned scan of the
     shard-clustered postings, qid/idf expanded from the task closure, no
-    exchange; the partials come back as one Arrow table and are merged in
-    NumPy on the driver;
+    exchange;
   * exchange (larger batches, offline logs, finish="distributed"): block
     rows joined to their (qid, idf) and hash-partitioned on (qid, shard);
     the partials are resolved by a docmap join and ranked by a window.
+The first two share the coordinator merge: the partials, one Arrow table,
+are ranked in NumPy on the driver and resolved through the handle's
+ord -> doc_id array.
 
 Block-max WAND (Ding & Suel, SIGIR 2011), adapted to a vectorized two-pass
 form that is *provably exact* (see _score_blocks): phase 1 scores the few
@@ -544,9 +551,18 @@ def _score_blocks(
     so a block "decoded" here is a slice, and a posting scores idf x w.
     -> (doc_ids, scores, n_blocks, n_decoded), where n_decoded counts the
     blocks scored (the WAND probe plus the survivors). Batched NumPy only
-    — the body of _partials_kernel, which both query routes run, so they
-    are score-identical by construction."""
+    — the body of _partials_kernel, which every query route runs, so they
+    are score-identical by construction.
+
+    The cut is exact under the final key (rounded score desc, doc_id asc):
+    every doc whose rounded score reaches the group's k-th rounded score is
+    kept, so the whole k-boundary tie class survives whatever order its
+    doc_ids take against the ords, and the coordinator's doc_id tie-break
+    sees all of it. WAND prunes against the lower edge of theta's rounded
+    class for the same reason: a doc scoring below theta can still round
+    into the k-th score's class."""
     nb = len(terms)
+    scale = 10.0**SCORE_DECIMALS
     ub = idf * (mtf * (k1 + 1.0) / (mtf + k1 * (1.0 - b + b * mdl / avgdl)))
 
     def gather(blocks: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
@@ -574,6 +590,9 @@ def _score_blocks(
         theta = np.partition(acc, len(acc) - k)[len(acc) - k] if len(acc) >= k else -np.inf
         if np.isfinite(theta):
             # phase 2: vectorized per-block survival test (see _wand_survival)
+            # against the lower edge of theta's rounded class, less a slack
+            # for the float error of summing a doc's terms in another order
+            theta = (np.floor(theta * scale + 0.5) - 0.5) / scale - 1e-9
             keep = _wand_survival(terms, first, last, ub, theta)
             keep[probe] = True  # already scored; keep their contributions
 
@@ -581,12 +600,13 @@ def _score_blocks(
     uniq, inv = np.unique(all_docs, return_inverse=True)
     acc = np.zeros(len(uniq))
     np.add.at(acc, inv, scores)
-    # partial top-k within the shard on the SAME key as the final merge:
-    # (half-up-rounded score desc, doc_id asc) — otherwise a near-tie doc cut
-    # here by raw score could out-rank a kept one after rounding upstream
-    acc_r = np.floor(acc * 10.0**SCORE_DECIMALS + 0.5) / 10.0**SCORE_DECIMALS
-    sel = np.lexsort((uniq, -acc_r))[:k]
-    return uniq[sel], acc_r[sel], nb, int(keep.sum())
+    # scores are HALF_UP-rounded here, as the final merge ranks them; the
+    # cut keeps the k-th rounded score's whole tie class
+    acc_r = np.floor(acc * scale + 0.5) / scale
+    if len(acc_r) > k:
+        sel = acc_r >= np.partition(acc_r, len(acc_r) - k)[len(acc_r) - k]
+        uniq, acc_r = uniq[sel], acc_r[sel]
+    return uniq, acc_r, nb, int(keep.sum())
 
 
 def _shard_partition_salt(
@@ -641,15 +661,29 @@ class IndexHandle:
         self.postings = spark.read.parquet(f"{index_dir}/postings")
         self.dictionary = spark.read.parquet(f"{index_dir}/dictionary")
         self.docmap = spark.read.parquet(f"{index_dir}/docmap")
-        # driver-side hot caches for the interactive path (a search head
+        # driver-side hot state for the interactive path (a search head
         # keeps its dictionary in RAM): term_id -> (df, idf) with df=0 for
-        # terms absent from the index, and ord -> doc_id. Misses are
-        # batch-fetched in one pruned-scan job; warm queries schedule no
-        # dictionary or docmap job at all. Same staleness contract as the
-        # DataFrames above: fixed at handle load.
+        # terms absent from the index, misses batch-fetched in one
+        # pruned-scan job, and the ord -> doc_id array (doc_ids()). Warm
+        # queries schedule no dictionary or docmap job at all. Same
+        # staleness contract as the DataFrames above: fixed at handle load.
         self._df_cache: dict[int, tuple[int, float]] = {}
-        self._doc_cache: dict[int, int] = {}
+        self._doc_ids: np.ndarray | None = None
         self._shard_view: DataFrame | None = None
+
+    def doc_ids(self) -> np.ndarray:
+        """The docmap as a driver-side int64 array indexed by ord (ords are
+        the dense 0..n_docs-1 rank, see ordinals.py): 8 B per document,
+        read in one docmap scan on first use. The coordinator merge resolves
+        a k-boundary tie class of any size with one gather — a hot term's
+        class can hold most of the corpus, far past what an IN-list docmap
+        lookup can carry."""
+        if self._doc_ids is None:
+            tab = self.docmap.select("ord", "doc_id").toArrow()
+            doc_ids = np.empty(tab.num_rows, dtype=np.int64)
+            doc_ids[tab.column("ord").to_numpy()] = tab.column("doc_id").to_numpy()
+            self._doc_ids = doc_ids
+        return self._doc_ids
 
     def shard_clustered(self) -> DataFrame:
         """Postings re-clustered so every partition holds COMPLETE shards —
@@ -676,12 +710,13 @@ class IndexHandle:
     def cache(self) -> "IndexHandle":
         # ONE cached copy of the postings, in the shard-clustered layout:
         # the interactive kernel scans it shuffle-free, and the distributed
-        # tail re-shuffles it by (qid, shard) exactly as it would any layout
+        # tail re-shuffles it by (qid, shard) exactly as it would any layout.
+        # The docmap scan that fills doc_ids() also materializes its cache.
         self.postings = self.shard_clustered().cache()
         self._shard_view = self.postings
         self.dictionary = self.dictionary.cache()
         self.docmap = self.docmap.cache()
-        self.postings.count(), self.dictionary.count(), self.docmap.count()
+        self.postings.count(), self.dictionary.count(), self.doc_ids()
         return self
 
 
@@ -691,9 +726,24 @@ class IndexHandle:
 # collect becomes a driver bottleneck for offline million-query joins
 _ISIN_PUSHDOWN_MAX_TERMS = 4096
 
-# largest batch taking the interactive route (qid slices + coordinator
-# merge). Collect volume is bounded by qids x n_shards x (k + 32) rows
+# largest batch taking the coordinator merge (the driver or the Spark
+# interactive partials). The partials it collects hold each (qid, shard)
+# group's top k plus the rest of its k-boundary tie class, so their volume
+# is bounded by the batch's postings, not by qids x shards x k
 _DRIVER_FINISH_MAX_QIDS = 256
+
+# postings budget of the driver route, as sum(df) over the batch's
+# scoreable (qid, term) pairs (free from the probe's df cache): a batch
+# within it is scored on the driver from one JVM-only scan of the cached
+# shard view, with no Python-UDF task wave. Recorded on 4 cores: the
+# driver kernel runs 4-6M postings/s on few-group batches (2.41-2.53M
+# postings in 0.42-0.57 s), plus about 0.2 ms per (qid, shard) group; the
+# warm Python task wave it replaces costs 0.41-0.73 s before any scoring.
+# At 262,144 = 2^18 postings the kernel's worst case is ~65 ms, a sixth of
+# the cheapest task wave, which leaves room for the scan and toArrow
+# (57-201 ms for single queries) that also grow with the postings fetched;
+# every single query of the benchmark pools fits, batches of 100+ do not.
+_DRIVER_SCORE_MAX_POSTINGS = 262_144
 
 # postings budget of one interactive qid slice, measured as sum(df) over the
 # slice's scoreable (qid, term) pairs — an upper bound on postings touched,
@@ -746,9 +796,9 @@ def _empty_topk_df(spark: SparkSession) -> DataFrame:
 
 
 def _bounded_cache_fill(cache: dict, keys, fetch, cap: int = 4_000_000) -> None:
-    """Shared bounded-cache fill for the handle's driver-side lookup caches:
-    fetch(missing) must insert every requested key. Eviction past `cap`
-    resets `missing` to ALL keys — previously-cached entries were just
+    """Bounded fill of the handle's driver-side df cache: fetch(missing)
+    must insert every requested key. Eviction past `cap` resets `missing`
+    to ALL keys — previously-cached entries were just
     wiped, so they must be refetched (the bug class this helper exists to
     make impossible: clearing without widening the fetch set leaves the
     subsequent cache[key] lookups raising KeyError)."""
@@ -798,38 +848,24 @@ def _merge_partials(partials: pa.Table, k: int, resolve) -> tuple:
 
 
 def _driver_finish_rows(handle: IndexHandle, partials: pa.Table, k: int) -> DataFrame:
-    """Coordinator merge of the interactive route: the per-(qid, shard)
-    partials of every qid slice arrive as one Arrow table (bounded:
-    qids x shards x (k+32) rows), are trimmed to each query's k-boundary
-    tie class and ranked in NumPy (_merge_partials), and ONLY the
-    surviving ordinals are resolved against the docmap — from the bounded
-    ``_doc_cache``, misses fetched by one isin-pruned scan. How a search
-    head merges shard results: a point lookup in place of a docmap-wide
-    join, no window stage, and an Arrow LocalRelation result whose
-    collect() schedules no job.
+    """Coordinator merge of the partials of a batch scored on the driver or
+    by the Spark interactive route, as one Arrow table: each query is
+    trimmed to its k-boundary tie class and ranked in NumPy
+    (_merge_partials), and the surviving ordinals are resolved by a gather
+    from the handle's ord -> doc_id array (IndexHandle.doc_ids). How a
+    search head merges shard results: no docmap join, no window stage, and
+    an Arrow LocalRelation result whose collect() schedules no job.
 
     Parity with the exchange route's distributed tail: kernel scores are
     already HALF_UP-rounded at SCORE_DECIMALS by ``_score_blocks`` (the
     tail's F.round on them is an identity) and keep their float64 bits
     from the kernel to the result, shards hold disjoint doc sets so merge
-    is a union, and (score desc, doc_id asc) is a total order — the
-    lexsort reproduces the row_number window bit-for-bit."""
-    dmap = handle._doc_cache
+    is a union, each shard kept its whole k-boundary tie class, and
+    (score desc, doc_id asc) is a total order — the lexsort reproduces the
+    row_number window bit-for-bit."""
 
-    def _fetch_docs(missing: list) -> None:
-        tab = (
-            handle.docmap.filter(in_expr("ord", missing))
-            .select("ord", "doc_id")
-            .toArrow()
-        )
-        dmap.update(
-            zip(tab.column("ord").to_pylist(), tab.column("doc_id").to_pylist())
-        )
-
-    def resolve(ords: np.ndarray) -> list:
-        keys = ords.tolist()
-        _bounded_cache_fill(dmap, keys, _fetch_docs)
-        return [dmap[o] for o in keys]
+    def resolve(ords: np.ndarray) -> np.ndarray:
+        return handle.doc_ids()[ords]
 
     q, d, s, r = _merge_partials(partials, k, resolve)
     if not len(q):
@@ -1000,7 +1036,7 @@ def _cand_from_trip(handle: IndexHandle, trip: list[tuple]) -> DataFrame:
 
 def _partials_kernel(
     expand,
-    keep_n: int,
+    k: int,
     k1: float,
     b: float,
     avgdl: float,
@@ -1015,12 +1051,13 @@ def _partials_kernel(
     a block a shared term gives several qids is decoded once.
     ``expand(tab, terms) -> (rows, qids, idfs)`` lists every (block row,
     qid) pair to score and its idf — the only step that differs between
-    the two query routes. One lexsort by (shard, qid, term_id, first_doc)
-    then lays every (qid, shard) group out contiguously, in the same block
-    order on both routes, and ``_score_blocks`` scores each group from
-    slices of the decoded postings with the same ``keep_n`` cut. A partial
-    is exact as long as the partition holds all of a (qid, shard) group's
-    blocks, which both routes guarantee.
+    the routes (the driver and Spark interactive routes share one).
+    One lexsort by (shard, qid, term_id, first_doc) then lays every
+    (qid, shard) group out contiguously, in the same block order on every
+    route, and ``_score_blocks`` scores each group from slices of the
+    decoded postings with the same exact k-boundary cut. A partial is
+    exact as long as the input holds all of a (qid, shard) group's
+    blocks, which every route guarantees.
 
     Emits (qid, ord, score) partial rows, or with ``stats`` one
     (qid, shard, n_blocks, n_decoded) row per group."""
@@ -1055,7 +1092,7 @@ def _partials_kernel(
                 idfs[g0:g1],
                 mtf[rq], mdl[rq], first[rq], last[rq], terms[rq], ns[rq],
                 row_start[rq], docs, w,
-                k=keep_n, k1=k1, b=b, avgdl=avgdl, use_wand=use_wand,
+                k=k, k1=k1, b=b, avgdl=avgdl, use_wand=use_wand,
             )
             if stats:
                 out.append(([qids[g0]], [sh[g0]], [nb], [ndec]))
@@ -1078,9 +1115,10 @@ def _partials_kernel(
 
 
 def _expand_by_term(trip: list[tuple]):
-    """The interactive route's ``expand`` for _partials_kernel: each block
-    row of a query term pairs with every (qid, idf) of ``trip`` that has
-    the term. The scan is filtered to those terms, so every row maps."""
+    """The ``expand`` of the driver and Spark interactive routes for
+    _partials_kernel: each block row of a query term pairs with every
+    (qid, idf) of ``trip`` that has the term. The scan is filtered to those
+    terms, so every row maps."""
     by_term: dict[int, list[tuple[int, float]]] = {}
     for q, t, _, idf_v in trip:
         by_term.setdefault(t, []).append((q, idf_v))
@@ -1102,15 +1140,56 @@ def _expand_by_term(trip: list[tuple]):
     return expand
 
 
+def _kernel_scan(postings: DataFrame, trip: list[tuple]) -> DataFrame:
+    """The block rows of a batch's query terms, projected to the kernel's
+    columns: a term_id IN filter, which the cached view's
+    (shard, term_id)-sorted batch stats and parquet row-group stats
+    prune."""
+    return postings.filter(
+        in_expr("term_id", sorted({t for _, t, _, _ in trip}))
+    ).select(
+        "term_id", "shard", "first_doc", "last_doc", "n", "max_tf", "min_dl",
+        "bytes",
+    )
+
+
+def _driver_partials(
+    handle: IndexHandle,
+    trip: list[tuple],
+    k: int,
+    k1: float,
+    b: float,
+    use_wand: bool,
+) -> pa.Table:
+    """Driver route: the batch's block rows come to the driver in one
+    JVM-only scan (``toArrow()``; no Python worker runs) and the one
+    partials kernel scores every (qid, shard) group here, as a search head
+    scores the postings its shards return. Holding every block of every
+    group, the driver's partials are exact, and bit-identical to the Spark
+    routes' (same kernel, same block order)."""
+    kernel = _partials_kernel(
+        _expand_by_term(trip), k, k1, b, handle.meta.avgdl, use_wand
+    )
+    # handle.postings IS the shard view once cached; uncached, the plain
+    # parquet scan needs no shard clustering, since every group is here
+    blocks = _kernel_scan(handle.postings, trip).toArrow()
+    return pa.Table.from_batches(
+        list(kernel(blocks.to_batches())),
+        schema=pa.schema(
+            [("qid", pa.int64()), ("ord", pa.int64()), ("score", pa.float64())]
+        ),
+    )
+
+
 def _interactive_partials(
     handle: IndexHandle,
     trip: list[tuple],
-    keep_n: int,
+    k: int,
     k1: float,
     b: float,
     use_wand: bool,
 ) -> DataFrame:
-    """Interactive route: per-(qid, shard) partials with no exchange.
+    """Spark interactive route: per-(qid, shard) partials with no exchange.
 
     The postings are scanned in the shard-clustered layout
     (IndexHandle.shard_clustered: every partition holds complete shards),
@@ -1120,31 +1199,25 @@ def _interactive_partials(
     each block row into the qids that need it. One Spark stage per batch.
     """
     kernel = _partials_kernel(
-        _expand_by_term(trip), keep_n, k1, b, handle.meta.avgdl, use_wand
+        _expand_by_term(trip), k, k1, b, handle.meta.avgdl, use_wand
     )
-    return (
-        handle.shard_clustered()
-        .filter(in_expr("term_id", sorted({t for _, t, _, _ in trip})))
-        .select(
-            "term_id", "shard", "first_doc", "last_doc", "n",
-            "max_tf", "min_dl", "bytes",
-        )
-        .mapInArrow(kernel, schema="qid long, ord long, score double")
+    return _kernel_scan(handle.shard_clustered(), trip).mapInArrow(
+        kernel, schema="qid long, ord long, score double"
     )
 
 
 def _interactive_partial_rows(
     handle: IndexHandle,
     trip: list[tuple],
-    keep_n: int,
+    k: int,
     k1: float,
     b: float,
     use_wand: bool,
 ) -> pa.Table:
-    """Partial rows of an interactive batch as one Arrow table, for the
-    coordinator merge. The batch splits into min(ceil(sum(df) / budget),
-    n_qids) volume-balanced qid slices (greedy LPT over per-qid sum(df);
-    the budget is _FAST_PARTIALS_MAX_POSTINGS). One slice runs inline;
+    """Partial rows of an interactive batch over the driver route's budget
+    as one Arrow table, for the coordinator merge. The batch splits into
+    min(ceil(sum(df) / budget), n_qids) volume-balanced qid slices (greedy
+    LPT over per-qid sum(df); the budget is _FAST_PARTIALS_MAX_POSTINGS). One slice runs inline;
     several run as independent single-stage jobs, CONCURRENTLY, so batch
     parallelism is n_slices x the shard view's partitions
     (IndexHandle.shard_clustered) with no exchange.
@@ -1160,7 +1233,7 @@ def _interactive_partial_rows(
     )
     if n_slices <= 1:
         return _interactive_partials(
-            handle, trip, keep_n, k1, b, use_wand
+            handle, trip, k, k1, b, use_wand
         ).toArrow()
     loads = sorted(
         ((sum(t[2] for t in v), q) for q, v in per_qid.items()), reverse=True
@@ -1177,7 +1250,7 @@ def _interactive_partial_rows(
 
     def run(sl: list) -> pa.Table:
         return _interactive_partials(
-            handle, sl, keep_n, k1, b, use_wand
+            handle, sl, k, k1, b, use_wand
         ).toArrow()
 
     with ThreadPoolExecutor(max_workers=min(n_slices, 8)) as ex:
@@ -1187,7 +1260,7 @@ def _interactive_partial_rows(
 def _exchange_partials(
     handle: IndexHandle,
     cand: DataFrame,
-    keep_n: int,
+    k: int,
     k1: float,
     b: float,
     use_wand: bool,
@@ -1204,7 +1277,7 @@ def _exchange_partials(
             tab.column("qid").to_numpy(),
             tab.column("idf").to_numpy(),
         ),
-        keep_n, k1, b, handle.meta.avgdl, use_wand, stats,
+        k, k1, b, handle.meta.avgdl, use_wand, stats,
     )
     # explicit projection: the candidate frame still carries block_id,
     # which the kernel never reads and the exchange need not ship
@@ -1237,19 +1310,25 @@ def bm25_topk_indexed(
     as the exhaustive tf-frame ``bm25.bm25_topk``. Pass an ``IndexHandle``
     (optionally .cache()d) to amortize index loading across queries.
 
-    Two routes, one scoring kernel (_partials_kernel):
-      * interactive — ``finish="auto"`` and at most _DRIVER_FINISH_MAX_QIDS
-        qids: qid slices over the shard-clustered view with no exchange
-        (_interactive_partial_rows), then the coordinator merge
-        (_driver_finish_rows);
+    Three routes, one scoring kernel (_partials_kernel):
+      * driver — ``finish="auto"``, at most _DRIVER_FINISH_MAX_QIDS qids and
+        sum(df) within _DRIVER_SCORE_MAX_POSTINGS: one JVM-only scan of the
+        cached shard view to the driver, the kernel on the driver
+        (_driver_partials), then the coordinator merge
+        (_driver_finish_rows); no Python-UDF job;
+      * Spark interactive — the same qid cap over the postings budget: qid
+        slices over the shard-clustered view with no exchange
+        (_interactive_partial_rows), then the same coordinator merge;
       * exchange — everything else (``finish="distributed"``, larger
         batches, offline query logs): the candidate frame hash-partitioned
         on (qid, shard), the same kernel, then the distributed docmap join
         + per-qid window. This is the plan offline million-query logs run
         on a cluster, so ``finish="distributed"`` makes it independently
         driver-gated (``bm25_topk_wand_distributed``).
-    Both routes are bit-identical (pinned against ``bm25.bm25_topk`` by
-    test_routes_match_tf_frame)."""
+    Each (qid, shard) partial keeps its whole k-boundary tie class
+    (_score_blocks), so every route is exact under the (score desc,
+    doc_id asc) order and the routes are bit-identical (pinned against
+    ``bm25.bm25_topk`` by test_routes_match_tf_frame)."""
     if finish not in ("auto", "distributed"):
         raise ValueError(f"finish must be auto|distributed, got {finish!r}")
     if k < 1:
@@ -1259,12 +1338,6 @@ def bm25_topk_indexed(
     handle = IndexHandle(spark, index) if isinstance(index, str) else index
     use_wand = method == "wand"
 
-    # per-shard partials keep k + headroom: rounded-score ties across distinct
-    # (tf, dl) profiles are ordered by doc_id in the final window, and ordinal
-    # order within a shard is (doc_len, doc_id) — the headroom guarantees every
-    # possible tie-class member at the k boundary survives the shard cut
-    keep_n = k + 32
-
     trip = _interactive_trip(handle, queries)
     if trip is _BULK:
         cand = _bulk_candidate_blocks(handle, queries)
@@ -1273,12 +1346,15 @@ def bm25_topk_indexed(
         df._spark_graft_local_topk = []
         return df
     elif finish == "auto" and len({t[0] for t in trip}) <= _DRIVER_FINISH_MAX_QIDS:
-        partials = _interactive_partial_rows(handle, trip, keep_n, k1, b, use_wand)
+        if sum(t[2] for t in trip) <= _DRIVER_SCORE_MAX_POSTINGS:
+            partials = _driver_partials(handle, trip, k, k1, b, use_wand)
+        else:
+            partials = _interactive_partial_rows(handle, trip, k, k1, b, use_wand)
         return _driver_finish_rows(handle, partials, k)
     else:
         cand = _cand_from_trip(handle, trip)
 
-    partial = _exchange_partials(handle, cand, keep_n, k1, b, use_wand)
+    partial = _exchange_partials(handle, cand, k, k1, b, use_wand)
     resolved = partial.join(handle.docmap, "ord").select("qid", "doc_id", "score")
     ranked = grouped_topk(
         resolved.withColumn("score", F.round("score", SCORE_DECIMALS)),

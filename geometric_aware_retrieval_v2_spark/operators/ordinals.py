@@ -22,7 +22,7 @@ expression, so every job derives the identical bucketing by construction:
   1. one metadata-cheap count;
   2. boundaries from a deterministic xxhash64-filtered sample (no RNG);
   3. per-bucket counts -> driver prefix sums (n_ranges rows);
-  4. hash-repartition on bucket + in-partition sort + mapInPandas local rank.
+  4. hash-repartition on bucket + in-partition sort + mapInArrow local rank.
 
 The resulting ordinal is the exact global rank under (doc_len, doc_id) —
 independent of input partitioning (permutation-invariance test). At very
@@ -35,7 +35,7 @@ from __future__ import annotations
 from typing import Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -111,13 +111,13 @@ def assign_ordinals(
         "bkt", k1, k2
     )
 
-    def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def assign(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         seen: dict[int, int] = {}
-        for pdf in batches:
-            if len(pdf) == 0:
+        for rb in batches:
+            if rb.num_rows == 0:
                 continue
-            b = pdf["bkt"].to_numpy()
-            ids = pdf[k2].to_numpy(dtype=np.int64)
+            b = rb.column("bkt").to_numpy()
+            ids = rb.column(k2).to_numpy().astype(np.int64, copy=False)
             ords = np.empty(len(b), dtype=np.int64)
             change = np.flatnonzero(np.diff(b)) + 1
             starts = np.concatenate(([0], change))
@@ -127,6 +127,8 @@ def assign_ordinals(
                 base = offsets[key] + seen.get(key, 0)
                 ords[s:e] = base + np.arange(e - s)
                 seen[key] = seen.get(key, 0) + (e - s)
-            yield pd.DataFrame({"doc_id": ids, "ord": ords})
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(ids), pa.array(ords)], names=["doc_id", "ord"]
+            )
 
-    return parts.mapInPandas(assign, schema="doc_id long, ord long")
+    return parts.mapInArrow(assign, schema="doc_id long, ord long")

@@ -34,7 +34,6 @@ from __future__ import annotations
 from typing import Iterator
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -46,7 +45,7 @@ from geometric_aware_retrieval_v2_spark.functions.varbyte import (
 
 BLOCK_SIZE_DEFAULT = 128
 
-# pack tasks buffer their whole shuffle partition as one pandas frame (group
+# pack tasks buffer their whole shuffle partition as NumPy columns (group
 # completeness); 4M rows x 5 int64 cols ~ 160 MB buffered per task — the
 # bound that keeps the buffer executor-safe regardless of corpus size
 ROWS_PER_PACK_TASK = 4_000_000
@@ -58,7 +57,7 @@ def pack_width(n_rows: int, parallelism: int, rows_per_task: int = ROWS_PER_PACK
     ``spark.sql.shuffle.partitions`` is a per-session constant (~#cores); the
     pack kernel buffers its whole partition, so at 10^12-file scale the
     session default would put corpus/width rows — unbounded gigabytes — in
-    one pandas frame. Width = max(parallelism, ceil(n_rows / rows_per_task))
+    one task's buffer. Width = max(parallelism, ceil(n_rows / rows_per_task))
     keeps every core busy on small inputs and bounds per-task memory on huge
     ones. ``n_rows`` may be an upper bound (sum(doc_len) >= posting rows).
     """
@@ -257,18 +256,6 @@ def _pack_arrays(
     )
 
 
-def _pack_partition(pdf: pd.DataFrame, block_size: int) -> pd.DataFrame:
-    """pandas adapter over _pack_arrays (tests and small callers)."""
-    return _pack_arrays(
-        pdf["term_id"].to_numpy(dtype=np.int64),
-        pdf["shard"].to_numpy(),
-        pdf["doc_id"].to_numpy(dtype=np.int64),
-        pdf["tf"].to_numpy(dtype=np.uint64),
-        pdf["dl"].to_numpy(dtype=np.uint64),
-        block_size,
-    ).to_pandas()
-
-
 def pack_postings(
     tf_dl: DataFrame,
     n_shards: int,
@@ -295,7 +282,7 @@ def pack_postings(
     overhead — with vocab-scale group counts (millions of terms) per-group
     UDF dispatch dominates otherwise.
 
-    ``n_tasks`` bounds the per-task pandas buffer: callers that know (an
+    ``n_tasks`` bounds the per-task buffer: callers that know (an
     upper bound on) the input row count pass ``pack_width(n_rows, ...)``;
     with ``None`` the session-default shuffle width is used — fine for
     tests/small frames, NOT for production builds (the buffer then grows

@@ -11,6 +11,8 @@ from __future__ import annotations
 import shutil
 
 import pytest
+from hypothesis import HealthCheck, assume, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from geometric_aware_retrieval_v2_spark.functions.tokenizer import doc_stats, tokenize_terms
@@ -228,16 +230,32 @@ _ROUTE_BATCH = [
 ]
 
 
+def _spy_routes(monkeypatch, ix) -> list:
+    """Record the name of every partials function a query calls."""
+    calls = []  # list.append is atomic across the slice threads
+
+    def spy(fn):
+        def wrapped(*a, **kw):
+            calls.append(fn.__name__)
+            return fn(*a, **kw)
+        monkeypatch.setattr(ix, fn.__name__, wrapped)
+
+    for fn in (ix._driver_partials, ix._interactive_partials, ix._exchange_partials):
+        spy(fn)
+    return calls
+
+
 @pytest.mark.parametrize("method", ["wand", "exhaustive"])
 @pytest.mark.parametrize(
     "route",
-    ["one_slice", "slices", "one_qid_over_budget", "exchange_cap0",
+    ["driver", "one_slice", "slices", "one_qid_over_budget", "exchange_cap0",
      "exchange_distributed"],
 )
 def test_routes_match_tf_frame(spark, index_dir, monkeypatch, route, method):
-    """Every query route — the interactive route as one inline slice, as
-    several concurrent qid slices, and with a single qid over the slice
-    budget; the exchange route reached through the qid cap and through
+    """Every query route — the driver route; the Spark interactive route
+    (forced by a zero driver budget) as one inline slice, as several
+    concurrent qid slices, and with a single qid over the slice budget;
+    the exchange route reached through the qid cap and through
     finish="distributed" — returns exactly the tf-frame ``bm25.bm25_topk``
     rows. A spy pins which route each case took."""
     from geometric_aware_retrieval_v2_spark.localrel import local_queries_df
@@ -247,8 +265,10 @@ def test_routes_match_tf_frame(spark, index_dir, monkeypatch, route, method):
     queries = local_queries_df(spark, rows)
     h = ix.IndexHandle(spark, index_dir)
     total_df = sum(t[2] for t in ix._interactive_trip(h, queries))
-    assert 3 < total_df <= ix._FAST_PARTIALS_MAX_POSTINGS
+    assert 3 < total_df <= ix._DRIVER_SCORE_MAX_POSTINGS
     finish = "auto"
+    if route in ("one_slice", "slices", "one_qid_over_budget"):
+        monkeypatch.setattr(ix, "_DRIVER_SCORE_MAX_POSTINGS", 0)
     if route == "slices":
         monkeypatch.setattr(ix, "_FAST_PARTIALS_MAX_POSTINGS", total_df // 3)
     elif route == "one_qid_over_budget":
@@ -257,27 +277,45 @@ def test_routes_match_tf_frame(spark, index_dir, monkeypatch, route, method):
         monkeypatch.setattr(ix, "_DRIVER_FINISH_MAX_QIDS", 0)
     elif route == "exchange_distributed":
         finish = "distributed"
-    calls = []  # list.append is atomic across the slice threads
-
-    def spy(fn):
-        def wrapped(*a, **kw):
-            calls.append(fn.__name__)
-            return fn(*a, **kw)
-        monkeypatch.setattr(ix, fn.__name__, wrapped)
-
-    spy(ix._interactive_partials)
-    spy(ix._exchange_partials)
+    calls = _spy_routes(monkeypatch, ix)
     got = _collect_topk(
         bm25_topk_indexed(spark, h, queries, k=10, method=method, finish=finish)
     )
+    n_drv = calls.count("_driver_partials")
     n_int = calls.count("_interactive_partials")
     n_exc = calls.count("_exchange_partials")
     if route.startswith("exchange"):
-        assert (n_int, n_exc) == (0, 1), calls
+        assert (n_drv, n_int, n_exc) == (0, 0, 1), calls
+    elif route == "driver":
+        assert (n_drv, n_int, n_exc) == (1, 0, 0), calls
     elif route == "slices":
-        assert n_int >= 2 and n_exc == 0, calls
+        assert n_drv == 0 and n_int >= 2 and n_exc == 0, calls
     else:
-        assert (n_int, n_exc) == (1, 0), calls
+        assert (n_drv, n_int, n_exc) == (0, 1, 0), calls
+    docs = docs_from_documents(spark, SF_SMOKE)
+    want = _collect_topk(
+        bm25.bm25_topk(tokenize_terms(docs), doc_stats(docs), queries, k=10)
+    )
+    assert got == want and len(got) > 0
+
+
+@pytest.mark.parametrize("offset", [-1, 0, 1])
+def test_driver_budget_seam(spark, index_dir, monkeypatch, offset):
+    """At the driver budget's seam: a batch whose sum(df) equals the budget
+    or is below it is scored on the driver, one over it on Spark, and both
+    sides return exactly the tf-frame rows."""
+    from geometric_aware_retrieval_v2_spark.localrel import local_queries_df
+    from geometric_aware_retrieval_v2_spark.operators import index as ix
+
+    queries = local_queries_df(spark, _ROUTE_BATCH)
+    h = ix.IndexHandle(spark, index_dir)
+    total_df = sum(t[2] for t in ix._interactive_trip(h, queries))
+    monkeypatch.setattr(ix, "_DRIVER_SCORE_MAX_POSTINGS", total_df + offset)
+    calls = _spy_routes(monkeypatch, ix)
+    got = _collect_topk(bm25_topk_indexed(spark, h, queries, k=10))
+    assert calls == (
+        ["_interactive_partials"] if offset < 0 else ["_driver_partials"]
+    )
     docs = docs_from_documents(spark, SF_SMOKE)
     want = _collect_topk(
         bm25.bm25_topk(tokenize_terms(docs), doc_stats(docs), queries, k=10)
@@ -295,12 +333,6 @@ def test_in_expr_rejects_empty_ids(spark):
     assert spark.range(5).filter(in_expr("id", [1, 3])).count() == 2
 
 
-@pytest.mark.xfail(
-    strict=True,
-    reason="per-shard partials are cut at k + 32 on (score, ord) before the "
-    "doc_id tie-break: a boundary tie class larger than that keeps the "
-    "shortest docs, not the smallest doc_ids",
-)
 @pytest.mark.parametrize("finish", ["auto", "distributed"])
 @pytest.mark.parametrize("method", ["wand", "exhaustive"])
 def test_boundary_ties_across_doc_lengths(spark, tmp_path, method, finish):
@@ -308,8 +340,9 @@ def test_boundary_ties_across_doc_lengths(spark, tmp_path, method, finish):
     lengths: avgdl is exactly 3, so tf 1 at dl 3 and tf 2 at dl 7 give
     tf / (tf + k1 (1 - b + b dl / avgdl)) = 1 / 2.2 for both. The dl-7 docs
     hold the smallest doc_ids, so the exact top-10 is doc_ids 0..9; ords
-    rank dl-3 docs first, and each of the 2 shards holds ~60 of them —
-    more than k + 32."""
+    rank dl-3 docs first, and each of the 2 shards holds ~60 of them, so a
+    shard cut on (score, ord) at any fixed depth under the class size
+    keeps the wrong docs."""
     rows = (
         [(i, "x x p p p p q") for i in range(20)]  # dl 7, tf 2
         + [(20 + i, "x p q") for i in range(120)]  # dl 3, tf 1
@@ -327,6 +360,68 @@ def test_boundary_ties_across_doc_lengths(spark, tmp_path, method, finish):
         bm25_topk_indexed(spark, d, queries, k=10, method=method, finish=finish)
     )
     assert got == want
+
+
+@st.composite
+def _tie_corpora(draw):
+    """A corpus whose "x" docs tie on the rounded BM25 score across two
+    doc lengths (tf 1 at dl 3 and tf 2 at dl 7 under avgdl exactly 3: two
+    dl-1 fillers balance each dl-7 doc), with shuffled doc_ids. Ords rank
+    the dl-3 docs of the class first, and the class holds more of them
+    than k + 32 per shard, while a dl-7 doc has a doc_id among the class's
+    k smallest: a shard cut on (score, ord) at any fixed depth drops it.
+    A few dl-3 "x y q" docs rank above the class for a query with "y"."""
+    n7 = draw(st.integers(4, 30))
+    n3 = draw(st.integers(100, 160))
+    k = draw(st.integers(1, 20))
+    texts = (
+        ["x x p p p p q"] * n7 + ["x p q"] * n3 + ["z"] * (2 * n7)
+        + ["x y q"] * draw(st.integers(0, 4)) + ["z z z"] * draw(st.integers(0, 10))
+    )
+    ids = draw(st.permutations(range(len(texts))))
+    assume(min(ids[:n7]) < sorted(ids[n7 : n7 + n3])[k - 1])
+    return (
+        [(int(i), t) for i, t in zip(ids, texts)],
+        k,
+        draw(st.sampled_from([1, 2])),
+        draw(st.sampled_from(["x", "x y", "x q"])),
+    )
+
+
+@given(_tie_corpora())
+@settings(
+    max_examples=5,
+    deadline=None,
+    derandomize=True,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+def test_rounded_ties_exact_on_every_route(spark, tmp_path_factory, monkeypatch, case):
+    """Generated corpora with large rounded-score tie classes across doc
+    lengths: ``wand`` and ``exhaustive`` return exactly the tf-frame rows
+    on the driver, Spark interactive and exchange routes."""
+    from geometric_aware_retrieval_v2_spark.operators import index as ix
+
+    rows, k, n_shards, text = case
+    docs = spark.createDataFrame(rows, schema="doc_id long, content string")
+    d = str(tmp_path_factory.mktemp("ties") / "idx")
+    build_index(spark, docs, d, n_partitions=1, n_shards=n_shards, block_size=8)
+    queries = spark.createDataFrame([(1, text)], schema="qid long, text string")
+    want = _collect_topk(
+        bm25.bm25_topk(tokenize_terms(docs), doc_stats(docs), queries, k=k)
+    )
+    h = ix.IndexHandle(spark, d)
+    budget = ix._DRIVER_SCORE_MAX_POSTINGS
+    for route, driver_budget, finish in (
+        ("driver", budget, "auto"),
+        ("spark", 0, "auto"),
+        ("exchange", budget, "distributed"),
+    ):
+        monkeypatch.setattr(ix, "_DRIVER_SCORE_MAX_POSTINGS", driver_budget)
+        for method in ("wand", "exhaustive"):
+            got = _collect_topk(
+                bm25_topk_indexed(spark, h, queries, k=k, method=method, finish=finish)
+            )
+            assert got == want, (route, method)
 
 
 def test_pack_narrowed_types_identical(spark, index_dir):
@@ -692,11 +787,12 @@ def test_decode_blocks_matches_decode_block(index_dir, shape):
         assert decode_blocks(pa.chunked_array([], pa.binary()), ns)[3].tolist() == [0]
 
 
-def _per_block_partials(post, trip, keep_n, k1, b, avgdl):
+def _per_block_partials(post, trip, k, k1, b, avgdl):
     """Per-row reference for the interactive kernel: every (qid, shard)
     group scored exhaustively, each block decoded on its own with
     ``decode_block`` and each doc's term contributions summed in term_id
-    order, in the kernel's group order (shard, qid)."""
+    order, in the kernel's group order (shard, qid), and cut to the docs
+    whose rounded score reaches the group's k-th."""
     import math
 
     import numpy as np
@@ -727,8 +823,9 @@ def _per_block_partials(post, trip, keep_n, k1, b, avgdl):
             ranked = sorted(
                 ((math.floor(v * scale + 0.5) / scale, doc) for doc, v in acc.items()),
                 key=lambda x: (-x[0], x[1]),
-            )[:keep_n]
-            out += [(qid, doc, v) for v, doc in ranked]
+            )
+            kth = ranked[min(k, len(ranked)) - 1][0] if ranked else 0.0
+            out += [(qid, doc, v) for v, doc in ranked if v >= kth]
     return out
 
 
@@ -755,9 +852,9 @@ def test_partials_kernel_matches_per_block_reference(spark, index_dir, method):
     assert len(set(terms)) < len(terms)  # some term serves several qids
     post = pq.read_table(f"{index_dir}/postings")
     post = post.filter(pc.is_in(post.column("term_id"), pa.array(sorted(set(terms)))))
-    keep_n, k1, b = 10 + 32, 1.2, 0.75
+    k, k1, b = 10, 1.2, 0.75
     avgdl = h.meta.avgdl
-    want = _per_block_partials(post, trip, keep_n, k1, b, avgdl)
+    want = _per_block_partials(post, trip, k, k1, b, avgdl)
     assert len(want) > 50
     schema = pa.schema([("qid", pa.int64()), ("ord", pa.int64()), ("score", pa.float64())])
     want_tab = pa.Table.from_pylist(
@@ -770,13 +867,13 @@ def test_partials_kernel_matches_per_block_reference(spark, index_dir, method):
         for p in range(n_parts):
             part = post.filter(pa.array(shards % n_parts == p))
             kernel = ix._partials_kernel(
-                ix._expand_by_term(trip), keep_n, k1, b, avgdl, method == "wand"
+                ix._expand_by_term(trip), k, k1, b, avgdl, method == "wand"
             )
             got += list(kernel(part.to_batches(max_chunksize=97)))
         got_tab = pa.Table.from_batches(got, schema=schema)
         assert got_tab.sort_by(key).equals(want_tab.sort_by(key)), n_parts
     stats_kernel = ix._partials_kernel(
-        ix._expand_by_term(trip), keep_n, k1, b, avgdl, method == "wand", stats=True
+        ix._expand_by_term(trip), k, k1, b, avgdl, method == "wand", stats=True
     )
     stats = pa.Table.from_batches(list(stats_kernel(post.to_batches())))
     assert stats.schema.names == ["qid", "shard", "n_blocks", "n_decoded"]
@@ -809,8 +906,9 @@ def test_shard_partition_salt_balances_loads(spark, n_shards, n_parts):
 def test_shard_view_fewer_cores_than_shards(spark, tmp_path, monkeypatch, n_shards):
     """With defaultParallelism 4 below n_shards, the cached shard view has
     4 balanced partitions that each hold whole shards, and both query
-    methods still return the tf-frame rows, for one query and for a batch
-    split over several concurrent qid slices."""
+    methods still return the tf-frame rows on the Spark interactive route
+    (the driver budget is zeroed), for one query and for a batch split
+    over several concurrent qid slices."""
     from collections import Counter
 
     from geometric_aware_retrieval_v2_spark.localrel import local_queries_df
@@ -822,6 +920,7 @@ def test_shard_view_fewer_cores_than_shards(spark, tmp_path, monkeypatch, n_shar
     monkeypatch.setattr(
         type(spark.sparkContext), "defaultParallelism", property(lambda self: 4)
     )
+    monkeypatch.setattr(ix, "_DRIVER_SCORE_MAX_POSTINGS", 0)
     h = ix.IndexHandle(spark, d).cache()
     try:
         placed = (
@@ -872,3 +971,24 @@ def test_all_oov_block_stats_schedule_no_job(spark, index_dir):
     finally:
         sc.setJobGroup(None, None)
     assert rows == [] and jobs == []
+
+
+def test_worker_modules_import_without_pandas():
+    """The modules a Python worker imports to run the build and query
+    UDFs (postings, ordinals, tokenizer) load without pandas: the package
+    resolves its pandas-backed exports lazily."""
+    import subprocess
+    import sys
+
+    code = (
+        "import sys\n"
+        "import geometric_aware_retrieval_v2_spark.operators.postings\n"
+        "import geometric_aware_retrieval_v2_spark.operators.ordinals\n"
+        "import geometric_aware_retrieval_v2_spark.functions.tokenizer\n"
+        "assert 'pandas' not in sys.modules, 'pandas imported'\n"
+        "from geometric_aware_retrieval_v2_spark import get_spark, quick_experiment\n"
+        "assert callable(get_spark) and callable(quick_experiment)\n"
+    )
+    from tests.conftest import REPO
+
+    subprocess.run([sys.executable, "-c", code], cwd=str(REPO), check=True)

@@ -112,3 +112,34 @@ def test_microbench_large_group_no_quadratic_blowup():
     assert dt < 1.0, f"vectorized survival took {dt:.2f}s on 1e4 blocks"
     want = _survival_loop_reference(terms, first, last, ub, theta)
     assert np.all(got | ~want)
+
+
+def test_wand_keeps_blocks_that_round_into_the_kth_class():
+    """WAND prunes against the lower edge of theta's rounded-score class: a
+    block whose upper bound is below theta but rounds to the same score
+    still holds a doc of the k-boundary tie class, which the doc_id
+    tie-break can rank first. One term, k=1: the probe scores blocks 0-3
+    (theta = T = 2.0000004); block 4's only doc scores T' = 1.9999996 < T,
+    both round to 2.0, and its doc_id 5 sorts before the probe's 100."""
+    from geometric_aware_retrieval_v2_spark.operators.index import _score_blocks
+
+    k1, b, avgdl = 1.2, 0.0, 1.0
+
+    def weight(m):  # the kernel's tf weight at b = 0
+        return m * (k1 + 1.0) / (m + k1 * (1.0 - b + b * 1.0 / avgdl))
+
+    def mtf_for(y):  # invert weight(m) = y
+        return y * k1 / ((k1 + 1.0) - y)
+
+    mtf = np.array([mtf_for(2.0000004), 1e6, 1e6, 1e6, mtf_for(1.9999996)])
+    w = np.array([weight(mtf[0]), 0.5, 0.5, 0.5, weight(mtf[4])])
+    docs = np.array([100, 101, 102, 103, 5], dtype=np.int64)
+    ones = np.ones(5)
+    for use_wand in (True, False):
+        got, scores, nb, nd = _score_blocks(
+            ones, mtf, ones, docs, docs, np.full(5, 7, np.int64),
+            np.ones(5, np.int64), np.arange(5), docs, w,
+            k=1, k1=k1, b=b, avgdl=avgdl, use_wand=use_wand,
+        )
+        assert sorted(got.tolist()) == [5, 100] and scores.tolist() == [2.0, 2.0]
+        assert nd == nb == 5
